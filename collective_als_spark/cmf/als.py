@@ -6,38 +6,45 @@ rating relations keyed by (leftCol, rightCol), fluent setters, ``fit``
 → model with one (id, features) DataFrame per entity, ``predict`` for
 any entity pair with NaN cold start.
 
-Execution is Spark-first, not a port of the reference's RDD block
-machinery (in/out-blocks, CSC, TimSort — reference
-``CollectiveALS.scala:481-961`` — are physical details of 2016-era
-MLlib and are *not* reproduced):
+Execution:
 
   - 2-entity single-relation fits delegate to
     ``pyspark.ml.recommendation.ALS`` (same algorithm family the
-    reference copied from; Scala-side, battle-tested at scale).
-  - N-entity fits run a driver-side Gauss-Seidel loop over entities
-    (reference ``CollectiveALS.scala:409-425``). Per target entity:
-    join the other side's current factors onto each touching relation
-    (the DataFrame analog of the out-block "send" step at ``:985-991``),
-    union contributions across relations (replaces the fullOuterJoin
-    merge at ``:1037-1047`` — union → grouped solve is the idiomatic
-    equivalent), hash-repartition by target id into blocks, and solve
-    all normal equations of a block in one Arrow batch
-    (``applyInPandas`` + vectorized numpy — see cmf/solver.py).
-  - Lineage is truncated with eager ``localCheckpoint`` per entity
-    update, exactly where the reference calls
-    ``localCheckpoint(); count()`` (``:421-422``).
+    reference copied from) unless ``force_native`` is set.
+  - N-entity fits run a Gauss-Seidel loop over entities (reference
+    ``CollectiveALS.scala:409-425``). Each entity's factors live on the
+    driver as one sorted numpy array (``ids: int64[n]``,
+    ``F: float32[n, rank]``). At fit start every entity gets one
+    in-block: the union of every relation direction that touches it,
+    as (id, src, rating, rel) rows, hash-partitioned on id into
+    ``min(num_blocks, defaultParallelism)`` partitions, sorted on id
+    within each partition and persisted. An entity update is one
+    ``mapInPandas`` over its in-block: the source entities' arrays
+    arrive by ``SparkContext.broadcast``, rows find their source factor
+    with ``searchsorted``, and ``solver.solve_block`` solves every id's
+    merged normal equations (the fullOuterJoin merge at
+    ``:1037-1047``), one Arrow batch at a time; the last id of a batch
+    is carried into the next, so a task holds one batch plus one id's
+    rows however large its partition is. The solved block comes back to
+    the driver as the entity's next array. So an update is one Spark
+    job with no shuffle, no per-rating factor join and no checkpoint;
+    the implicit YtY Gramians are computed on the driver.
+  - Guard: an entity with more than ``MAX_FACTOR_IDS`` ids raises
+    ``ValueError`` before any factor is built, since its array must fit
+    on the driver and in every executor's broadcast. The id collect
+    that feeds the guard is itself limited to ``MAX_FACTOR_IDS + 1``
+    ids per entity.
+  - With a checkpoint dir configured, every ``checkpoint_interval``-th
+    update writes the entity's factor table as a reliable checkpoint.
 
-Scale notes (100 TB stance): contributions shuffle once per (iter ×
-entity × relation) on the target id — the same asymptotic shuffle the
-reference performs; blocks are sized by ``num_blocks`` (reference
-default 2000, ``:29-30``) so each Arrow batch fits executor memory;
-factor tables stay partitioned by id hash, and the predict join lets
-Catalyst/AQE choose broadcast vs shuffle per side.
+The model keeps a factor cache, one (ids, F) pair per entity: the fit
+fills it; for models built from DataFrames or by ``load`` it is
+collected once, on first use. Fold-in serving (cmf/foldin.py) reads it.
 """
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 from typing import Iterable
 
 import numpy as np
@@ -68,6 +75,33 @@ def _check_numeric(df: DataFrame, col: str) -> None:
         )
 
 
+# Largest entity (in ids) whose factors the fit and the model's factor
+# cache hold on the driver and broadcast; at rank 100 this is 800 MB.
+MAX_FACTOR_IDS = 2_000_000
+
+
+def _check_factor_size(entity: str, n_ids: int) -> None:
+    if n_ids > MAX_FACTOR_IDS:
+        raise ValueError(
+            f"entity {entity!r} has {n_ids} ids, above MAX_FACTOR_IDS="
+            f"{MAX_FACTOR_IDS}: its factors are held on the driver and broadcast"
+        )
+
+
+def _sorted_arrays(pdf: pd.DataFrame, rank: int) -> tuple[np.ndarray, np.ndarray]:
+    """(id, features) rows -> (sorted int64 ids, float32 [n, rank])."""
+    if len(pdf) == 0:
+        return np.zeros(0, dtype=np.int64), np.zeros((0, rank), dtype=np.float32)
+    ids = pdf["id"].values.astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], np.stack(pdf["features"].values).astype(np.float32)[order]
+
+
+def _factor_frame(spark: SparkSession, ids: np.ndarray, feats: np.ndarray) -> DataFrame:
+    pdf = pd.DataFrame({"id": ids.astype(np.int32), "features": feats.tolist()})
+    return spark.createDataFrame(pdf, _FACTOR_SCHEMA)
+
+
 class CollectiveALSModel:
     """Fitted model: ``rank`` + one (id, features) DataFrame per entity.
 
@@ -80,16 +114,40 @@ class CollectiveALSModel:
         entities: list[str],
         factors: dict[str, DataFrame],
         prediction_col: str = "prediction",
+        arrays: dict[str, tuple[np.ndarray, np.ndarray]] | None = None,
     ):
         self.rank = rank
         self.entities = list(entities)
         self.factors = factors
         self.prediction_col = prediction_col
+        self._arrays = dict(arrays or {})
+        self._broadcasts: dict = {}
 
     def factors_for(self, entity: str) -> DataFrame:
         if entity not in self.factors:
             raise KeyError(f"unknown entity {entity!r}; have {self.entities}")
         return self.factors[entity]
+
+    def factor_arrays(self, entity: str) -> tuple[np.ndarray, np.ndarray]:
+        """The factor cache: (sorted int64 ids, float32 [n, rank]) of
+        ``entity``. Filled by the fit; otherwise collected once, on
+        first use, under the ``MAX_FACTOR_IDS`` guard."""
+        if entity not in self._arrays:
+            pdf = (
+                self.factors_for(entity).select("id", "features")
+                .limit(MAX_FACTOR_IDS + 1).toPandas()
+            )
+            _check_factor_size(entity, len(pdf))
+            self._arrays[entity] = _sorted_arrays(pdf, self.rank)
+        return self._arrays[entity]
+
+    def broadcast_factors(self, entity: str):
+        """``factor_arrays(entity)`` as a ``SparkContext`` broadcast,
+        created once per entity."""
+        if entity not in self._broadcasts:
+            sc = self.factors_for(entity).sparkSession.sparkContext
+            self._broadcasts[entity] = sc.broadcast(self.factor_arrays(entity))
+        return self._broadcasts[entity]
 
     def set_prediction_col(self, value: str) -> "CollectiveALSModel":
         self.prediction_col = value
@@ -271,7 +329,8 @@ class CollectiveALS:
         """Fit on one DataFrame (2-entity convenience, reference
         ``CollectiveALS.scala:94``) or a dict {(leftCol, rightCol): df}
         (N-entity, reference ``:96-133``). Column names must be entity
-        names; ``rating_col`` may be "" for implicit all-ones ratings
+        names; a self relation (e, e) has the column e twice, left side
+        first. ``rating_col`` may be "" for implicit all-ones ratings
         (reference ``:104``)."""
         if isinstance(relations, DataFrame):
             relations = {(self.entities[0], self.entities[1]): relations}
@@ -282,6 +341,18 @@ class CollectiveALS:
                     f"relation ({lcol},{rcol}) references unknown entity; "
                     f"entities={self.entities}"
                 )
+            li, ri = self.entities.index(lcol), self.entities.index(rcol)
+            if lcol == rcol:
+                # a self relation names its entity twice: the first
+                # column is the left side, the second the right side
+                names = list(df.columns)
+                if names.count(lcol) != 2:
+                    raise ValueError(
+                        f"self relation ({lcol},{rcol}) needs the column {lcol!r} twice"
+                    )
+                i = names.index(lcol)
+                names[i], names[names.index(lcol, i + 1)] = "_left", "_right"
+                df, lcol, rcol = df.toDF(*names), "_left", "_right"
             _check_numeric(df, lcol)
             _check_numeric(df, rcol)
             if self.rating_col:
@@ -289,7 +360,6 @@ class CollectiveALS:
                 rating = F.col(self.rating_col).cast("float")
             else:
                 rating = F.lit(1.0).cast("float")
-            li, ri = self.entities.index(lcol), self.entities.index(rcol)
             nd = df.select(
                 checked_cast(F.col(lcol)).alias("src"),
                 checked_cast(F.col(rcol)).alias("dst"),
@@ -370,49 +440,65 @@ class CollectiveALS:
         self, relations: list[tuple[int, int, DataFrame]]
     ) -> CollectiveALSModel:
         spark = relations[0][2].sparkSession
+        sc = spark.sparkContext
         n_ent = len(self.entities)
 
-        cached = []
-        for li, ri, df in relations:
-            c = df.persist(self.intermediate_storage_level)
-            cached.append((li, ri, c))
-
-        # entity universes: union + distinct per entity (reference :394-402)
-        factors: dict[int, DataFrame] = {}
+        # In-blocks: per target entity, every relation direction that
+        # touches it as (id, src, rating, rel), hash-partitioned on id
+        # once and persisted. src_of[e][rel] is the source entity of
+        # relation index rel (a self relation contributes both directions).
+        src_of: list[list[int]] = []
+        inblocks: list[DataFrame] = []
         for e in range(n_ent):
-            sides = []
-            for li, ri, df in cached:
-                if li == e:
-                    sides.append(df.select(F.col("src").alias("id")))
+            dirs = []  # (relation, id column, source column, source entity)
+            for li, ri, df in relations:
                 if ri == e:
-                    sides.append(df.select(F.col("dst").alias("id")))
-            if not sides:
+                    dirs.append((df, "dst", "src", li))
+                if li == e:
+                    dirs.append((df, "src", "dst", ri))
+            if not dirs:
                 raise ValueError(f"entity {self.entities[e]!r} appears in no relation")
-            ids = sides[0]
-            for s in sides[1:]:
-                ids = ids.union(s)
-            ids = ids.distinct()
-            factors[e] = self._initialize(ids, e).localCheckpoint(eager=True)
+            src_of.append([s for *_, s in dirs])
+            blk = reduce(DataFrame.union, [
+                df.select(F.col(i).alias("id"), F.col(s).alias("src"), "rating",
+                          F.lit(j).alias("rel"))
+                for j, (df, i, s, _) in enumerate(dirs)
+            ])
+            n_part = min(self._blocks_for(self.entities[e], spark), sc.defaultParallelism)
+            inblocks.append(
+                blk.repartition(n_part, "id").sortWithinPartitions("id")
+                .persist(self.intermediate_storage_level)
+            )
+
+        # Entity universes in one job (which also fills the in-block
+        # caches), at most MAX_FACTOR_IDS + 1 ids each so the guard runs
+        # before an oversized entity reaches the driver; then the
+        # deterministic per-id init (reference :394-402).
+        u = reduce(DataFrame.union, [
+            blk.select("id").distinct().limit(MAX_FACTOR_IDS + 1)
+            .select(F.lit(e).alias("e"), "id")
+            for e, blk in enumerate(inblocks)
+        ]).toPandas()
+        state: list[tuple[np.ndarray, np.ndarray]] = []
+        for e in range(n_ent):
+            ids = np.sort(u["id"].values[u["e"].values == e].astype(np.int64))
+            _check_factor_size(self.entities[e], len(ids))
+            state.append((ids, S.init_factors_for_ids(ids, self.rank, self.seed, e)))
 
         rank, reg, alpha = self.rank, self.reg_param, self.alpha
         implicit, nonneg = self.implicit_prefs, self.nonnegative
 
-        # Reliable checkpointing (r03 verdict #3): the reference SETTABLE
-        # checkpointInterval is dead code on its own loop — it always
-        # localCheckpoints (quirk Q2, CollectiveALS.scala:421-422; the
-        # commented-out interval design at :446-468 shows the intent).
-        # localCheckpoint blocks die with a lost executor, so a
-        # 100-iteration production fit (IHRCollectiveALS.scala:53-58)
-        # restarts from scratch on any failure. Here the interval is
-        # honored the way the reference intended: when a checkpoint dir
-        # is configured, every checkpoint_interval-th (iter x entity)
-        # update writes a RELIABLE checkpoint (survives executor loss,
-        # bounds recovery to one interval); other updates keep the cheap
-        # localCheckpoint. With no checkpoint dir the behavior is
-        # exactly quirk-Q2 (localCheckpoint every update).
+        # Reliable checkpointing: the reference's settable
+        # checkpointInterval is dead code on its own loop (quirk Q2,
+        # CollectiveALS.scala:421-422; the intended interval design is
+        # commented out at :446-468). Here, when a checkpoint dir is
+        # configured, every checkpoint_interval-th (iter x entity) update
+        # writes the entity's factor table as a reliable checkpoint. The
+        # loop's own state is the driver arrays, so there is no lineage
+        # to truncate between updates.
         reliable_every = (
             int(self.checkpoint_interval)
-            if spark.sparkContext.getCheckpointDir() is not None
+            if sc.getCheckpointDir() is not None
             and self.checkpoint_interval
             and int(self.checkpoint_interval) > 0
             else 0
@@ -421,148 +507,61 @@ class CollectiveALS:
 
         for _ in range(self.max_iter):
             for e in range(n_ent):
-                # relations touching e: (other_entity, flipped df with dst=e-side)
-                touching: list[tuple[int, DataFrame]] = []
-                for li, ri, df in cached:
-                    if ri == e:
-                        touching.append((li, df))
-                    if li == e:
-                        touching.append(
-                            (ri, df.select(
-                                F.col("dst").alias("src"),
-                                F.col("src").alias("dst"),
-                                "rating",
-                            ))
-                        )
-                ytys: list[np.ndarray | None] = []
-                contribs = []
-                for rel_idx, (other, rdf) in enumerate(touching):
-                    of = factors[other]
-                    if implicit:
-                        ytys.append(self._compute_yty(of))
-                    else:
-                        ytys.append(None)
-                    contribs.append(
-                        rdf.join(of.hint("shuffle_hash"), rdf["src"] == of["id"])
-                        .select(
-                            rdf["dst"].alias("id"),
-                            rdf["rating"],
-                            of["features"],
-                            F.lit(rel_idx).alias("rel"),
-                        )
-                    )
-                allc = contribs[0]
-                for c in contribs[1:]:
-                    allc = allc.union(c)
-
-                yty_arr = (
-                    np.stack([y for y in ytys]) if implicit else None
+                srcs = tuple(src_of[e])
+                # YtY of each relation's source factors, added once per
+                # (id, relation) present (reference :1003,1037-1047)
+                yty = (
+                    np.stack([S.compute_yty(state[s][1].astype(np.float64)) for s in srcs])
+                    if implicit else None
                 )
+                b = sc.broadcast({s: state[s] for s in set(srcs)})
 
-                def solve_block(pdf: pd.DataFrame, _yty=yty_arr) -> pd.DataFrame:
-                    if len(pdf) == 0:
-                        return pd.DataFrame({"id": [], "features": []})
-                    order = np.argsort(pdf["id"].values, kind="stable")
-                    ids = pdf["id"].values[order]
-                    X = np.stack(pdf["features"].values[order]).astype(np.float64)
-                    r = pdf["rating"].values[order].astype(np.float64)
-                    rel = pdf["rel"].values[order]
-                    starts = S._segment_starts(ids)
-                    uids = ids[starts]
-                    g = len(uids)
-                    k = X.shape[1]
-                    if _yty is None:
-                        uids2, AtA, Atb, counts = S.build_normal_equations(ids, X, r)
-                        nexpl = counts.astype(np.float64)
-                    else:
-                        c1 = alpha * np.abs(r)
-                        pos = r > 0
-                        w = np.where(pos, c1, 0.0)
-                        # reference add(a, b=(c1+1)/c1, c=c1): Atb += c*b*a
-                        # = (c1+1)*a; kernel multiplies weight*target, so
-                        # target = (c1+1)/c1 (safe-div; w=0 rows contribute 0)
-                        tgt = np.divide(
-                            c1 + 1.0, c1, out=np.zeros_like(c1), where=c1 > 0
-                        )
-                        tgt = np.where(pos, tgt, 0.0)
-                        # weights=w zeroes non-positive rows in both AtA and Atb
-                        uids2, AtA, Atb, _ = S.build_normal_equations(
-                            ids, X, np.ones_like(r), weights=w, targets=tgt
-                        )
-                        seg = np.searchsorted(uids, ids)
-                        nexpl = np.zeros(g)
-                        np.add.at(nexpl, seg, pos.astype(np.float64))
-                        # YtY added once per (id, relation) present (:1003,1037-1047)
-                        for rj in range(_yty.shape[0]):
-                            present = np.zeros(g, dtype=bool)
-                            np.logical_or.at(present, seg, rel == rj)
-                            AtA[present] += _yty[rj]
-                    lam = nexpl * reg  # ALS-WR weighting (:1030,1048-1051)
-                    if nonneg:
-                        sol = S.solve_nnls(AtA, Atb, lam)
-                    else:
-                        sol = S.solve_cholesky(AtA, Atb, lam)
-                    return pd.DataFrame(
-                        {
-                            "id": uids.astype(np.int32),
-                            "features": list(sol.astype(np.float32)),
-                        }
+                def solve(pdf: pd.DataFrame, arrays, srcs=srcs, yty=yty) -> pd.DataFrame:
+                    rel = pdf["rel"].values
+                    src = pdf["src"].values.astype(np.int64)
+                    X = np.empty((len(pdf), rank), dtype=np.float32)
+                    for j, s in enumerate(srcs):
+                        m = rel == j
+                        sids, SF = arrays[s]
+                        X[m] = SF[np.searchsorted(sids, src[m])]
+                    uids, sol = S.solve_block(
+                        pdf["id"].values, X, pdf["rating"].values, rel, yty,
+                        reg, alpha, implicit, nonneg,
                     )
+                    return pd.DataFrame({"id": uids.astype(np.int32), "features": list(sol)})
 
-                # one shuffle: hash ids into this entity's block count
-                # (per-entity num_blocks, reference :29-30); every id's
-                # rows co-locate, one Arrow batch solves a whole block
-                blocks = self._blocks_for(self.entities[e], spark)
-                new_factors = (
-                    allc.groupBy(F.pmod(F.hash("id"), F.lit(blocks)).alias("_blk"))
-                    .applyInPandas(lambda key, pdf: solve_block(pdf), _FACTOR_SCHEMA)
-                )
-                # Lineage truncation per entity update (reference :421-422),
-                # upgraded to a reliable checkpoint on the configured
-                # interval (see reliable_every above).
+                def update(batches: Iterable[pd.DataFrame], b=b, solve=solve):
+                    # The partition is sorted on id: solve each Arrow batch
+                    # but its last id, whose rows may continue in the next
+                    # batch and are carried into it.
+                    carry = None
+                    for pdf in batches:
+                        if carry is not None:
+                            pdf = pd.concat([carry, pdf], ignore_index=True)
+                        if len(pdf) == 0:
+                            continue
+                        ids = pdf["id"].values
+                        cut = int(np.searchsorted(ids, ids[-1]))
+                        carry = pdf.iloc[cut:]
+                        if cut:
+                            yield solve(pdf.iloc[:cut], b.value)
+                    if carry is not None:
+                        yield solve(carry, b.value)
+
+                out = inblocks[e].mapInPandas(update, _FACTOR_SCHEMA).toPandas()
+                b.destroy()
+                state[e] = _sorted_arrays(out, rank)
                 update_step += 1
                 if reliable_every and update_step % reliable_every == 0:
-                    factors[e] = new_factors.checkpoint(eager=True)
-                else:
-                    factors[e] = new_factors.localCheckpoint(eager=True)
+                    _factor_frame(spark, *state[e]).checkpoint(eager=True)
 
-        for _, _, df in cached:
-            df.unpersist()  # quirk Q5 fixed: reference never unpersists
+        for blk in inblocks:
+            blk.unpersist()
 
-        named = {self.entities[e]: factors[e] for e in range(n_ent)}
-        return CollectiveALSModel(self.rank, self.entities, named, self.prediction_col)
-
-    # ----------------------------------------------------------- helpers
-    def _initialize(self, ids: DataFrame, entity_index: int) -> DataFrame:
-        rank, seed = self.rank, self.seed
-
-        def gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                idv = pdf["id"].values.astype(np.int64)
-                feats = S.init_factors_for_ids(idv, rank, seed, entity_index)
-                yield pd.DataFrame(
-                    {"id": idv.astype(np.int32), "features": list(feats)}
-                )
-
-        return ids.mapInPandas(gen, _FACTOR_SCHEMA)
-
-    @staticmethod
-    def _compute_yty(factors: DataFrame) -> np.ndarray:
-        """Gramian of a factor table: partial per Arrow batch, summed on
-        the driver (k×k is tiny) — reference ``computeYtY`` (:1058-1065)."""
-
-        def gram(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["features"].values).astype(np.float64)
-                yield pd.DataFrame({"g": [S.compute_yty(X).ravel().tolist()]})
-
-        schema = T.StructType(
-            [T.StructField("g", T.ArrayType(T.DoubleType(), False), False)]
+        named = {
+            self.entities[e]: _factor_frame(spark, *state[e]) for e in range(n_ent)
+        }
+        arrays = {self.entities[e]: state[e] for e in range(n_ent)}
+        return CollectiveALSModel(
+            self.rank, self.entities, named, self.prediction_col, arrays=arrays
         )
-        parts = factors.select("features").mapInPandas(gram, schema).collect()
-        if not parts:
-            raise ValueError("empty factor table")
-        k = int(math.isqrt(len(parts[0].g)))
-        return np.sum([np.array(p.g).reshape(k, k) for p in parts], axis=0)

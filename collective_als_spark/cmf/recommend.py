@@ -46,23 +46,25 @@ def recommend_topk(
     """(id, rec_id, score, rk): top-k right-entity ids per left id by
     factor dot product.
 
-    The right factor matrix is collected once on the driver (guarded by
-    ``max_broadcast_items``) and shipped via ``SparkContext.broadcast``
-    — serialized once, torrent-distributed, cached per executor — so
-    each Arrow batch does one BLAS matmul instead of a per-pair join
-    (closure capture would re-serialize the matrix into every stage's
-    task binary).
+    The right factor matrix is collected to the driver in one bounded
+    collect (guarded by ``max_broadcast_items``) and shipped via
+    ``SparkContext.broadcast`` — serialized once, torrent-distributed,
+    cached per executor — so each Arrow batch does one BLAS matmul
+    instead of a per-pair join (closure capture would re-serialize the
+    matrix into every stage's task binary).
     """
-    n_items = right_factors.count()
-    if n_items > max_broadcast_items:
+    rows = right_factors.select("id", "features").limit(max_broadcast_items + 1).toPandas()
+    if len(rows) > max_broadcast_items:
         raise ValueError(
-            f"{n_items} right-side ids exceed max_broadcast_items="
-            f"{max_broadcast_items}; use the ANN path (ivf_topk over factors)"
+            f"right-side ids exceed max_broadcast_items={max_broadcast_items}; "
+            "use the ANN path (ivf_topk over factors)"
         )
-    rows = right_factors.select("id", "features").collect()
     sc = right_factors.sparkSession.sparkContext
-    b_rids = sc.broadcast(np.array([r["id"] for r in rows], dtype=np.int32))
-    b_R = sc.broadcast(np.array([r["features"] for r in rows], dtype=np.float32))
+    b_rids = sc.broadcast(rows["id"].values.astype(np.int32))
+    b_R = sc.broadcast(
+        np.stack(rows["features"].values).astype(np.float32)
+        if len(rows) else np.zeros((0, 0), dtype=np.float32)
+    )
 
     def score(batches: Iterable[pd.DataFrame]):
         rids, R = b_rids.value, b_R.value

@@ -148,3 +148,67 @@ def compute_yty(X: np.ndarray) -> np.ndarray:
     """Gramian of a factor chunk (combine chunks by summing) —
     reference ``computeYtY`` (``CollectiveALS.scala:1058-1065``)."""
     return X.T @ X
+
+
+def solve_block(
+    ids: np.ndarray,
+    X: np.ndarray,
+    r: np.ndarray,
+    rel: np.ndarray,
+    yty: np.ndarray | None,
+    reg: float,
+    alpha: float,
+    implicit: bool,
+    nonneg: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Solve the merged normal equations of every id in a block.
+
+    One row per rating: target ``ids``, source factor row ``X``, rating
+    ``r`` and relation index ``rel`` (rows in any order). Rows of all
+    relations touching an id merge into one system (reference
+    ``CollectiveALS.scala:1037-1047``), regularised with ALS-WR
+    ``reg * n`` (``:1030,1048-1051``). With ``implicit``, ``yty[j]`` (the
+    source Gramian of relation j) is added once per relation the id has
+    rows in. Returns (sorted unique ids, float32 factors). The fit's
+    entity update and fold-in both call this, so fold-in is the fit's
+    last half-step by construction.
+    """
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    X = X[order].astype(np.float64)
+    r = r[order].astype(np.float64)
+    if not implicit:
+        uids, AtA, Atb, counts = build_normal_equations(ids, X, r)
+        nexpl = counts.astype(np.float64)
+    else:
+        rel = rel[order]
+        c1 = alpha * np.abs(r)
+        pos = r > 0
+        w = np.where(pos, c1, 0.0)
+        # reference add(a, b=(c1+1)/c1, c=c1): Atb += c*b*a = (c1+1)*a;
+        # the kernel multiplies weight*target, so target = (c1+1)/c1
+        # (safe-div; w=0 rows contribute 0 to both AtA and Atb)
+        tgt = np.divide(c1 + 1.0, c1, out=np.zeros_like(c1), where=c1 > 0)
+        tgt = np.where(pos, tgt, 0.0)
+        uids, AtA, Atb, _ = build_normal_equations(
+            ids, X, np.ones_like(r), weights=w, targets=tgt
+        )
+        seg = np.searchsorted(uids, ids)
+        nexpl = np.zeros(len(uids))
+        np.add.at(nexpl, seg, pos.astype(np.float64))
+        for rj in range(yty.shape[0]):
+            present = np.zeros(len(uids), dtype=bool)
+            np.logical_or.at(present, seg, rel == rj)
+            AtA[present] += yty[rj]
+    lam = nexpl * reg
+    sol = solve_nnls(AtA, Atb, lam) if nonneg else solve_cholesky(AtA, Atb, lam)
+    return uids, sol.astype(np.float32)
+
+
+def lookup_rows(ids: np.ndarray, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row positions of ``keys`` in the sorted array ``ids``, and a mask
+    of the keys that are present."""
+    if len(ids) == 0:
+        return np.zeros(len(keys), dtype=np.int64), np.zeros(len(keys), dtype=bool)
+    pos = np.minimum(np.searchsorted(ids, keys), len(ids) - 1)
+    return pos, ids[pos] == keys

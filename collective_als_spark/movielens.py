@@ -29,11 +29,16 @@ reference apps print) and metrics restricted to the pairs BOTH models
 score (the apples-to-apples factorization-quality comparison).
 
 The dataset lives in the read-only reference checkout; loading it as
-input is fine (nothing is written there).
+input is fine (nothing is written there). Where it is absent,
+:func:`planted_movielens` generates seeded inputs of the same shape
+from planted user, movie and genre factors, and :func:`collective_parity`
+runs the same comparison on them.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,16 +78,84 @@ def genre_relation(movies: DataFrame) -> DataFrame:
     )
 
 
+def planted_movielens(spark: SparkSession) -> dict[str, DataFrame]:
+    """Seeded MovieLens-shaped inputs from planted user, movie and genre
+    factors, for hosts without ``ml-latest-small``.
+
+    ``ratings`` (userId, movieId, rating, timestamp): 300 users rate 60
+    of 200 movies each, drawn with Zipf-like popularity, at
+    3 + u·v/sqrt(rank) + noise. 60 lies inside MovieLens's range:
+    ml-latest-small has 100,004 ratings from 671 users, about 149 each,
+    and every user rated at least 20. Ratings fall at uniform times over
+    a year, except that 10 movies are released in its last 5%, so, as in
+    MovieLens's chronological tail, a late holdout holds movies that no
+    training rating covers. ``genres`` (movieId, genreId, rating=1.0):
+    each movie belongs to the 1-3 genres whose planted factors align
+    best with its own, so the side relation carries signal about the
+    movie factors, as genres do in MovieLens.
+    """
+    n_users, n_movies, n_genres, per_user, n_new = 300, 200, 12, 60, 10
+    rank, noise, year = 4, 0.3, 365 * 86400
+    rng = np.random.default_rng(0)
+    U = rng.normal(size=(n_users, rank))
+    V = rng.normal(size=(n_movies, rank))
+    G = rng.normal(size=(n_genres, rank))
+    pop = 1.0 / np.arange(1, n_movies + 1) ** 0.8
+    pop /= pop.sum()
+    users = np.repeat(np.arange(n_users), per_user)
+    movies = np.concatenate(
+        [rng.choice(n_movies, size=per_user, replace=False, p=pop) for _ in range(n_users)]
+    )
+    rating = 3.0 + np.einsum("ij,ij->i", U[users], V[movies]) / np.sqrt(rank)
+    rating += rng.normal(scale=noise, size=len(users))
+    release = np.zeros(n_movies, dtype=np.int64)
+    release[rng.choice(n_movies, size=n_new, replace=False)] = year - year // 20
+    ts = release[movies] + (rng.random(len(users)) * (year - release[movies])).astype(np.int64)
+    ratings = pd.DataFrame({
+        "userId": users.astype(np.int32),
+        "movieId": movies.astype(np.int32),
+        "rating": rating.astype(np.float32),
+        "timestamp": ts,
+    })
+    k = rng.integers(1, 4, size=n_movies)
+    best = np.argsort(-(V @ G.T), axis=1)
+    mg = [(m, int(g)) for m in range(n_movies) for g in best[m, : k[m]]]
+    genres = pd.DataFrame({
+        "movieId": np.array([m for m, _ in mg], dtype=np.int32),
+        "genreId": np.array([g for _, g in mg], dtype=np.int32),
+        "rating": np.ones(len(mg), dtype=np.float32),
+    })
+    return {
+        "ratings": spark.createDataFrame(ratings, ML_SCHEMAS["ratings"]),
+        "genres": spark.createDataFrame(genres, "movieId int, genreId int, rating float"),
+    }
+
+
 def movielens_parity(
     spark: SparkSession,
     base: str = ML_LATEST_SMALL,
+    **kwargs,
+) -> DataFrame:
+    """:func:`collective_parity` on ``ml-latest-small`` at ``base``, with
+    the genre relation from its movies table."""
+    data = load_movielens(spark, base)
+    return collective_parity(spark, data["ratings"], genre_relation(data["movies"]), **kwargs)
+
+
+def collective_parity(
+    spark: SparkSession,
+    ratings: DataFrame,
+    genres: DataFrame,
     rank: int = 10,
     max_iter: int = 20,
     reg_param: float = 0.01,
     seed: int = 42,
     num_blocks: int = 8,
+    holdout: float = 0.01,
 ) -> DataFrame:
-    """Run both reference apps end-to-end; one row per model with
+    """Run both reference apps end-to-end on ``ratings`` (userId,
+    movieId, rating, timestamp) and ``genres`` (movieId, genreId,
+    rating); one row per model with
     (model, rmse, mae, n_pairs, rmse_common, mae_common, n_common).
 
     ``rmse``/``mae``/``n_pairs`` are over the model's own finite pairs
@@ -93,7 +166,7 @@ def movielens_parity(
     Defaults are the reference's hyperparameters: rank 10 (ALS default,
     ``CollectiveALS.scala:27``), maxIter=20 + regParam=0.01
     (``MovieLensALS.scala:16-17``), chronological 99/1 split
-    (``MovieLensALS.scala:13``).
+    (``MovieLensALS.scala:13``; ``holdout`` is the test share).
     """
     from pyspark.ml.recommendation import ALS
 
@@ -107,12 +180,9 @@ def movielens_parity(
     if spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir("/tmp/spark-checkpoints-movielens")
 
-    data = load_movielens(spark, base)
     train, test = split_chronologically(
-        data["ratings"], [0.99, 0.01], "timestamp", tie_break=["userId", "movieId"]
+        ratings, [1 - holdout, holdout], "timestamp", tie_break=["userId", "movieId"]
     )
-    train = train.localCheckpoint()  # two fits read it; cut the rank subplan
-    test = test.localCheckpoint()
 
     # --- baseline: stock ALS (MovieLensALS.scala:15-27)
     als = (
@@ -138,7 +208,7 @@ def movielens_parity(
     )
     model = cals.fit(
         {("userId", "movieId"): train,
-         ("movieId", "genreId"): genre_relation(data["movies"])}
+         ("movieId", "genreId"): genres}
     )
     coll_pred = model.predict(test, "userId", "movieId").select(
         "userId", "movieId", F.col("prediction").alias("p_coll")

@@ -9,13 +9,14 @@ Rebuild, 100 TB shapes for both modes:
 
 - ``exact=True`` — two-phase global rank: a ``repartitionByRange``
   shuffle on the sort key (the same range shuffle the reference's
-  ``sortBy`` does), per-partition ``row_number`` (window partitioned by
+  ``sortBy`` does), a per-partition prefix count (window partitioned by
   ``spark_partition_id`` — never a single-task global window), then a
   broadcast join against the tiny per-partition cumulative-offset table.
   Global rank = local rank + partition offset, exactly ``zipWithIndex``
-  semantics, fully parallel. Slice bounds are kept as floats
-  (``lo*n <= rk < hi*n``) to match the reference's fractional-boundary
-  behavior (``Utils.scala:24-27``) bit-for-bit.
+  semantics, fully parallel. The ranking is materialised once
+  (``localCheckpoint``) and every slice filters it. Slice bounds are
+  kept as floats (``lo*n <= rk < hi*n``) to match the reference's
+  fractional-boundary behavior (``Utils.scala:24-27``) bit-for-bit.
 - ``exact=False`` — approx quantile cuts on the time column (no rank at
   all); boundaries off by at most the approx-quantile error. Rows with
   a NULL time sort first in exact mode, so the approx path routes them
@@ -25,7 +26,7 @@ Rebuild, 100 TB shapes for both modes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -41,83 +42,34 @@ def _cumulative_bounds(weights: list[float]) -> list[tuple[float, float]]:
     return cum
 
 
-def global_rank(
+def _global_prefix(
     df: DataFrame,
     order_cols: list,
-    rank_col: str = "_rk",
+    value: Column,
+    prefix_col: str,
+    total_col: str,
 ) -> DataFrame:
-    """Exact 0-based global rank without a global window.
+    """Exact EXCLUSIVE global prefix sum of ``value`` in ``order_cols``
+    order (sum over all strictly-preceding rows), plus its grand total,
+    without a single-task global window.
 
-    Range-shuffle on the ordering key, rank within each partition, then
-    add the partition's cumulative offset (tiny broadcast join). Also
-    attaches ``_n`` (total rows) so callers can cut by fraction without
-    a separate count job.
+    Range-shuffle on the ordering key, per-partition window prefix sum,
+    then add the partition's cumulative offset via a tiny broadcast join
+    (one row per shuffle partition; O(P²) offset work over P shuffle
+    partitions is negligible). Linear work per row.
     """
     part = df.repartitionByRange(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked_local = part.withColumn("_lrk", F.row_number().over(w_local) - F.lit(1))
-
-    counts = ranked_local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Cumulative offsets over the tiny per-partition-count frame (one
-    # row per shuffle partition; shares the range exchange with
-    # ranked_local via ReusedExchange). Computed by packing the counts
-    # into one sorted array and expanding with higher-order functions —
-    # no un-partitioned window anywhere in the plan (O(P^2) work for
-    # P = shuffle partitions is negligible).
-    packed = counts.agg(F.sort_array(F.collect_list(F.struct("_pid", "_cnt"))).alias("pc"))
-    offsets = packed.select(
-        F.explode(
-            F.expr(
-                "transform(pc, (x, i) -> struct("
-                "x._pid AS _pid, "
-                "aggregate(slice(pc, 1, i), 0L, (acc, y) -> acc + y._cnt) AS _off, "
-                "aggregate(pc, 0L, (acc, y) -> acc + y._cnt) AS _n))"
-            )
-        ).alias("s")
-    ).select("s.*")
-    return (
-        ranked_local.join(F.broadcast(offsets), "_pid")
-        .withColumn(rank_col, (F.col("_lrk") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrk", "_off")
-    )
-
-
-def global_cumsum(
-    df: DataFrame,
-    order_cols: list,
-    value_col: str,
-    cumsum_col: str = "_cum",
-    total_col: str = "_total",
-) -> DataFrame:
-    """Exact EXCLUSIVE global cumulative sum of ``value_col`` in
-    ``order_cols`` order (sum of all strictly-preceding rows), without a
-    single-task global window.
-
-    Same two-phase shape as :func:`global_rank`: range-shuffle on the
-    ordering key, per-partition window cumsum, then add the partition's
-    cumulative offset via a tiny broadcast join (one row per shuffle
-    partition). Linear work per row — replaces the O(V²)
-    ``aggregate(slice(arr, 1, i))`` prefix-sum-over-packed-array shape,
-    which re-scans the prefix per element. Also attaches ``total_col``
-    (grand total) so callers can compute shares without a second pass.
-    """
-    part = df.repartitionByRange(*order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    ).withColumn("_pv", value)
     w_local = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = part.withColumn(
-        "_lcum",
-        F.coalesce(F.sum(value_col).over(w_local), F.lit(0)).cast("long"),
+        "_lcum", F.coalesce(F.sum("_pv").over(w_local), F.lit(0)).cast("long")
     )
-    sums = part.groupBy("_pid").agg(F.sum(value_col).cast("long").alias("_cnt"))
-    # O(P²) offsets over the one-row-per-partition frame — same
-    # deliberately-tiny pattern as global_rank (P = shuffle partitions).
+    sums = part.groupBy("_pid").agg(F.sum("_pv").cast("long").alias("_cnt"))
     packed = sums.agg(F.sort_array(F.collect_list(F.struct("_pid", "_cnt"))).alias("pc"))
     offsets = packed.select(
         F.explode(
@@ -131,10 +83,34 @@ def global_cumsum(
     ).select("s.*")
     return (
         local.join(F.broadcast(offsets), "_pid")
-        .withColumn(cumsum_col, (F.col("_lcum") + F.col("_off")).cast("long"))
+        .withColumn(prefix_col, (F.col("_lcum") + F.col("_off")).cast("long"))
         .withColumn(total_col, F.col("_tot"))
-        .drop("_pid", "_lcum", "_off", "_tot")
+        .drop("_pid", "_pv", "_lcum", "_off", "_tot")
     )
+
+
+def global_rank(
+    df: DataFrame,
+    order_cols: list,
+    rank_col: str = "_rk",
+) -> DataFrame:
+    """Exact 0-based global rank (``zipWithIndex`` semantics) without a
+    global window: the exclusive prefix count. Also attaches ``_n``
+    (total rows) so callers can cut by fraction without a count job."""
+    return _global_prefix(df, order_cols, F.lit(1), rank_col, "_n")
+
+
+def global_cumsum(
+    df: DataFrame,
+    order_cols: list,
+    value_col: str,
+    cumsum_col: str = "_cum",
+    total_col: str = "_total",
+) -> DataFrame:
+    """Exact EXCLUSIVE global cumulative sum of ``value_col`` in
+    ``order_cols`` order, plus the grand total in ``total_col`` so
+    callers can compute shares without a second pass."""
+    return _global_prefix(df, order_cols, F.col(value_col), cumsum_col, total_col)
 
 
 def split_chronologically(
@@ -184,7 +160,9 @@ def split_chronologically(
         return slices
 
     order = [F.col(time_col)] + [F.col(c) for c in (tie_break or [])]
-    ranked = global_rank(df, order)
+    # rank once: every slice filters the same materialised ranking
+    # instead of re-running the range shuffle per slice
+    ranked = global_rank(df, order).localCheckpoint(eager=True)
     out = []
     for lo, hi in cum:
         out.append(
@@ -203,13 +181,10 @@ def chronological_slice_labels(
     tie_break: list[str] | None = None,
     label_col: str = "slice",
 ) -> DataFrame:
-    """One-pass variant of the exact split: every row gets its slice
-    index as a column from a SINGLE global-rank subplan, instead of N
-    filtered lineages that each re-execute the rank (the Seq[Dataset]
-    API re-runs the range shuffle per slice unless the optimizer
-    happens to reuse the exchange). Use this when downstream wants all
-    slices in one frame (size accounting, per-slice stats, fold-tagged
-    training data)."""
+    """One-frame variant of the exact split: every row gets its slice
+    index as a column from a single lazy global-rank subplan. Use this
+    when downstream wants all slices in one frame (size accounting,
+    per-slice stats, fold-tagged training data)."""
     cum = _cumulative_bounds(weights)
     order = [F.col(time_col)] + [F.col(c) for c in (tie_break or [])]
     ranked = global_rank(df, order)

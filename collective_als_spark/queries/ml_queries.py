@@ -310,17 +310,19 @@ def cmf_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("movielens_parity_metrics")
 def movielens_parity_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's core correctness check on its own dataset
-    (MovieLensALS.scala:8-46 vs MovieLensCollectiveALS.scala:9-51):
-    stock-ALS baseline vs 3-entity collective fit on ml-latest-small,
-    RMSE/MAE per model plus common-pair metrics. Ignores ``sf_dir`` —
-    the input is the reference checkout's CSV resources (read-only).
-    Rows-only (two iterative fits); the parity assertion itself lives in
-    tests/test_movielens_parity.py. max_iter=10 here keeps the sweep
-    affordable; the test runs the reference's full 20."""
-    from collective_als_spark.movielens import movielens_parity
+    """The reference's core correctness check (MovieLensALS.scala:8-46 vs
+    MovieLensCollectiveALS.scala:9-51): stock-ALS baseline vs 3-entity
+    collective fit, RMSE/MAE per model plus common-pair metrics, on
+    seeded MovieLens-shaped data with planted user/movie/genre factors
+    (``movielens.planted_movielens``; ignores ``sf_dir``). Rows-only
+    (two iterative fits); tests/test_movielens_parity.py asserts the
+    parity, and runs the real ml-latest-small where it is present."""
+    from collective_als_spark.movielens import collective_parity, planted_movielens
 
-    return movielens_parity(spark, max_iter=10)
+    data = planted_movielens(spark)
+    return collective_parity(
+        spark, data["ratings"], data["genres"], max_iter=10, holdout=0.1
+    )
 
 
 @register("als_regression_eval")
@@ -465,9 +467,11 @@ def cmf_foldin_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     factors (the exact ALS half-step), score their pairs — users the
     fitted model alone would NaN. Rows-only (iterative fit inside);
     ridge-optimality of the folded factors is pinned in
-    tests/test_foldin.py."""
-    from collective_als_spark.cmf.als import CollectiveALS
-    from collective_als_spark.cmf.foldin import fold_in_predict
+    tests/test_foldin.py. Every held-out user is folded in at once, so
+    this is the batch path: ``fold_in`` plus ``predict`` against the
+    fixed item factors, not the request call ``fold_in_predict``."""
+    from collective_als_spark.cmf.als import CollectiveALS, CollectiveALSModel
+    from collective_als_spark.cmf.foldin import fold_in
     from collective_als_spark.sources.testdata import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -491,4 +495,8 @@ def cmf_foldin_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .join(known_items, "item_id", "left_semi")
     )
-    return fold_in_predict(model, history, pairs, "user_id", "item", "item_id")
+    folded = CollectiveALSModel(model.rank, model.entities, {
+        "user": fold_in(model, history, "user_id", "item", "item_id"),
+        "item": model.factors_for("item"),
+    })
+    return folded.predict(pairs, "user", "item", "user_id", "item_id")

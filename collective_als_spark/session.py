@@ -27,6 +27,14 @@ def _mem_bytes(s: str) -> int:
         return 0
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of the
+    machine's physical RAM, at least 1 GiB and at most 48 GiB, so the JVM
+    cannot grow past the memory the host has."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, ram // 2 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "collective_als_spark",
     shuffle_partitions: int | None = None,
@@ -42,7 +50,7 @@ def get_spark(
     # SPARK_GRAFT_XMS (e.g. "8g"; production executors would set
     # Xms = Xmx). The flag is skipped when it would exceed the
     # configured driver memory (Xms > Xmx fails JVM startup).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     xms = os.environ.get("SPARK_GRAFT_XMS", "")
     jvm_opts = ""
     if xms not in ("", "0") and _mem_bytes(xms) <= _mem_bytes(driver_mem):
