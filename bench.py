@@ -19,11 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 HEADLINE = [
     "pricing_summary",
     "star_join_revenue",
-    "shipping_priority_top10",
-    "range_join_attribution",
-    "grouping_sets_agg",
     "topk_per_group",
-    "running_window_frame",
     "sessionization",
     "tumbling_window_agg",
     "exact_dedup",
@@ -39,35 +35,21 @@ HEADLINE = [
     # round-3 additions (r02 verdict #5): track the round-2 operator
     # families' cost per-round
     "prefix_jaccard_pairs",
-    "item_item_cosine",
-    "pagerank_trade_graph",
-    "tfidf_term_stats",
-    # round-3 new families: winnowing fingerprints, corpus-LM scoring,
-    # per-key recursive fold
+    # round-3 new families: winnowing fingerprints, corpus-LM scoring
     "winnowing_fingerprints",
     "unigram_logprob_score",
-    "ewma_user_value",
     # round-4 new families: corpus repetition signal, drift scoring,
-    # winnowing-candidate exact containment, outer-join distribution,
-    # real multimodal decode (Arrow round trip)
+    # winnowing-candidate exact containment, real multimodal decode
+    # (Arrow round trip)
     "duplicate_ngram_fraction",
     "source_kl_divergence",
     "substring_containment_pairs",
-    "customer_distribution_q13",
     "multimodal_ppm_decode",
-    # round-4 session-2 families: pure pushdown scan (Q6), deepest join
-    # (Q8, 8 tables), exists/not-exists decorrelation (Q21), the fused
-    # DQ constraint suite, seasonal anomaly scoring
-    "forecast_revenue_q6",
-    "market_share_q8",
-    "waiting_supplier_q21",
+    # round-4 session-2 family: the fused DQ constraint suite
     "dq_expectations_suite",
-    "seasonal_hourly_anomalies",
-    # round-5 families: output-bounded neighbor lists (the scale-ramp
-    # finding's production form), the oracle-checked CMF quality gate,
+    # round-5 families: the oracle-checked CMF quality gate,
     # the lake commit protocol end-to-end (CAS appends, stats+bloom
     # pruned merge/delete, time travel on a scratch table)
-    "item_item_topk",
     "cmf_quality_gate",
     "lake_snapshot_lifecycle",
     # deletion vectors + change feed + incremental view maintenance

@@ -10,7 +10,15 @@ Execution:
 
   - 2-entity single-relation fits delegate to
     ``pyspark.ml.recommendation.ALS`` (same algorithm family the
-    reference copied from) unless ``force_native`` is set.
+    reference copied from) unless ``force_native`` is set. The
+    delegate is kept because it is faster at the same accuracy.
+    Measured on a warm local[4] session (4 vCPU), on perfbench's
+    ``make_ratings`` seed 1 (1000 users x 800 items, 80% chronological
+    train), rank 10, 10 iterations: 50k ratings fit in 4.1-4.7 s with
+    MLlib against 7.5-7.8 s native, 200k in 4.6-4.7 s against
+    8.8-9.0 s, at equal holdout RMSE (0.4270 vs 0.4267; 0.3757 both).
+    The native fit's 20 updates are 20 Python ``mapInPandas`` jobs of
+    about 0.4 s each.
   - N-entity fits run a Gauss-Seidel loop over entities (reference
     ``CollectiveALS.scala:409-425``). Each entity's factors live on the
     driver as one sorted numpy array (``ids: int64[n]``,

@@ -3,7 +3,6 @@
 from collective_als_spark.queries import (  # noqa: F401
     events_queries,
     extended,
-    extended2,
     extended3,
     extended4,
     extended5,
@@ -12,7 +11,4 @@ from collective_als_spark.queries import (  # noqa: F401
     llm_data,
     ml_queries,
     relational,
-    subqueries,
-    tpch_extra,
-    tpch_full,
 )

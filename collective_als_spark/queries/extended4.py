@@ -1,6 +1,6 @@
 """Round-3 extension set: corpus-LM quality scoring, subset-duplication
-detection, sketch-based heavy hitters, robust statistics, and semantic
-(embedding-cluster) dedup.
+detection, sketch-based heavy hitters, source-weighted sampling, and
+semantic (embedding-cluster) dedup.
 
 These extend the LLM-data-pipeline surface (SURVEY §2.11 north star):
 unigram log-prob is the CCNet-style LM quality filter; containment is
@@ -221,48 +221,6 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "winsorized_stats",
-    oracle="""
-    WITH p AS (
-        SELECT event_type,
-               percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS lo,
-               percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS hi
-        FROM events GROUP BY event_type
-    )
-    SELECT e.event_type,
-           round(any_value(p.lo), 4) AS p05,
-           round(any_value(p.hi), 4) AS p95,
-           round(avg(least(greatest(e.value, p.lo), p.hi)), 4) AS wins_mean,
-           round(stddev_samp(least(greatest(e.value, p.lo), p.hi)), 4) AS wins_std
-    FROM events e JOIN p USING (event_type)
-    GROUP BY e.event_type
-    """,
-)
-def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized (tail-clipped) mean/std per event type — the robust
-    moment estimates a metrics pipeline uses when raw values carry
-    heavy tails. Two passes over the same type-keyed shuffle: exact
-    percentile bounds per group (group-count-sized frame, broadcast
-    back), then clipped aggregation."""
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.05)).alias("lo"),
-        F.percentile("value", F.lit(0.95)).alias("hi"),
-    )
-    clipped = F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi"))
-    return (
-        ev.join(F.broadcast(p), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.round(F.first("lo"), 4).alias("p05"),
-            F.round(F.first("hi"), 4).alias("p95"),
-            F.round(F.avg(clipped), 4).alias("wins_mean"),
-            F.round(F.stddev_samp(clipped), 4).alias("wins_std"),
-        )
-    )
-
-
 @register("semantic_dedup_kmeans")
 def semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means over the embedding space
@@ -353,46 +311,4 @@ def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars").cast("bigint").alias("n_chars"),
             F.col("rk").cast("int").alias("rk"),
         )
-    )
-
-
-@register(
-    "ewma_user_value",
-    oracle="""
-    WITH s AS (
-        SELECT user_id, (list(value ORDER BY ts, event_id))::DOUBLE[] AS vals
-        FROM events GROUP BY user_id
-    )
-    SELECT user_id,
-           CAST(len(vals) AS BIGINT) AS n_events,
-           round(list_reduce(vals, (acc, x) -> 0.7 * acc + 0.3 * x), 6) AS ewma
-    FROM s
-    """,
-)
-def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exponentially-weighted moving average of event values
-    (α=0.3), the canonical "recursive over ordered rows" operator that
-    no SQL window frame expresses: e_i = α·x_i + (1−α)·e_{i−1}. Done
-    as a per-key array fold — collect the user's ordered values (event
-    sequences are user-bounded, same justification as session_paths)
-    and F.aggregate the recurrence in one codegen'd pass. One user-
-    keyed shuffle; no global state.
-
-    Cross-engine determinism: both engines fold in the identical
-    (ts, event_id) order with IEEE doubles, so results match exactly;
-    DuckDB's list_reduce seeds with the first element, mirrored here
-    via element_at(vals, 1) + slice."""
-    ev = load_table(spark, sf_dir, "events")
-    arr = F.sort_array(F.collect_list(F.struct("ts", "event_id", "value")))
-    grouped = ev.groupBy("user_id").agg(arr.alias("arr"))
-    vals = F.transform(F.col("arr"), lambda x: x["value"])
-    ewma = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
-        F.element_at(vals, 1),
-        lambda acc, x: acc * 0.7 + x * 0.3,
-    )
-    return grouped.select(
-        "user_id",
-        F.size(vals).cast("bigint").alias("n_events"),
-        F.round(ewma, 6).alias("ewma"),
     )

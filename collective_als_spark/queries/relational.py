@@ -227,30 +227,6 @@ def pair_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "semi_anti_join",
-    oracle="""
-    SELECT c_custkey, 'has_orders' AS tag FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    UNION ALL
-    SELECT c_custkey, 'no_orders' AS tag FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-)
-def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_semi + left_anti joins (SURVEY §2.11: free in Spark, absent
-    in reference)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    semi = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select(
-        "c_custkey", F.lit("has_orders").alias("tag")
-    )
-    anti = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
-        "c_custkey", F.lit("no_orders").alias("tag")
-    )
-    return semi.union(anti)
-
-
-@register(
     "star_join_revenue",
     oracle="""
     SELECT r_name, n_name,
@@ -283,6 +259,52 @@ def star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("r_name", "n_name")
+    )
+
+
+@register(
+    "full_outer_merge",
+    oracle="""
+    WITH a AS (
+        SELECT o_custkey AS id, count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS spend
+        FROM orders GROUP BY o_custkey
+    ),
+    b AS (
+        SELECT user_id AS id, count(*) AS n_events,
+               round(sum(value), 2) AS activity
+        FROM events GROUP BY user_id
+    )
+    SELECT coalesce(a.id, b.id) AS id,
+           coalesce(n_orders, 0) AS n_orders,
+           coalesce(spend, 0.0) AS spend,
+           coalesce(n_events, 0) AS n_events,
+           coalesce(activity, 0.0) AS activity
+    FROM a FULL OUTER JOIN b ON a.id = b.id
+    """,
+)
+def full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J5 analog: per-ID merge of contributions from two relations via
+    FULL OUTER join + coalesce (reference CollectiveALS.scala:1037-1047,
+    where per-entity normal equations from every touching relation are
+    fullOuterJoin-merged). Both sides pre-aggregate (map-side combine)
+    before the join, so the shuffle carries one row per ID per side."""
+    orders = load_table(spark, sf_dir, "orders")
+    events = load_table(spark, sf_dir, "events")
+    a = orders.groupBy(F.col("o_custkey").alias("id")).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("spend"),
+    )
+    b = events.groupBy(F.col("user_id").alias("id")).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("activity"),
+    )
+    return a.join(b, "id", "full_outer").select(
+        F.col("id"),
+        F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
+        F.coalesce("spend", F.lit(0.0)).alias("spend"),
+        F.coalesce("n_events", F.lit(0)).alias("n_events"),
+        F.coalesce("activity", F.lit(0.0)).alias("activity"),
     )
 
 
@@ -360,57 +382,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "running_window_frame",
-    oracle="""
-    SELECT l_suppkey, l_orderkey, l_linenumber,
-           round(sum(l_quantity) OVER (
-               PARTITION BY l_suppkey
-               ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ), 2) AS running_qty
-    FROM lineitem
-    """,
-)
-def running_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame (running sum) — free Spark capability (SURVEY §2.5).
-
-    l_quantity is part of the ordering: the synthetic lineitem has
-    duplicate (orderkey, linenumber) keys, and without the summed
-    column in the sort key the tie order — and thus every prefix sum
-    between the tied rows — is engine-dependent."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "l_quantity")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return li.select(
-        "l_suppkey", "l_orderkey", "l_linenumber",
-        F.round(F.sum("l_quantity").over(w), 2).alias("running_qty"),
-    )
-
-
-@register(
-    "lag_event_gap",
-    oracle="""
-    SELECT event_id, user_id,
-           epoch_ms(ts) - lag(epoch_ms(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-           ) AS gap_ms
-    FROM events
-    """,
-)
-def lag_event_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag() per user — sessionization precursor (SURVEY §2.5)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ms = F.unix_millis("ts")
-    return ev.select(
-        "event_id", "user_id", (ms - F.lag(ms).over(w)).alias("gap_ms")
-    )
-
-
 # ------------------------------------------------------------------ O / top-k
 @register(
     "orderby_limit",
@@ -454,192 +425,6 @@ def rmse_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.abs(err)), 4).alias("mae"),
             F.count(F.lit(1)).alias("n"),
         )
-    )
-
-
-# -------------------------------------------------------- grouping extensions
-@register(
-    "rollup_agg",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           count(*) AS n
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-)
-def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP grouping sets (SURVEY §2.11 — absent in reference, free in
-    Spark)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "conditional_pivot",
-    oracle="""
-    SELECT user_id,
-           round(coalesce(sum(value) FILTER (WHERE event_type = 'click'), 0), 2) AS click_v,
-           round(coalesce(sum(value) FILTER (WHERE event_type = 'view'), 0), 2) AS view_v,
-           round(coalesce(sum(value) FILTER (WHERE event_type = 'purchase'), 0), 2) AS purchase_v
-    FROM events
-    GROUP BY user_id
-    """,
-)
-def conditional_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot via conditional aggregation (engine-portable pivot form)."""
-    ev = _t(spark, sf_dir, "events")
-
-    def cond(t):
-        return F.round(
-            F.coalesce(F.sum(F.when(F.col("event_type") == t, F.col("value"))), F.lit(0.0)), 2
-        )
-
-    return ev.groupBy("user_id").agg(
-        cond("click").alias("click_v"),
-        cond("view").alias("view_v"),
-        cond("purchase").alias("purchase_v"),
-    )
-
-
-@register(
-    "json_extract_props",
-    oracle="""
-    SELECT event_id,
-           CAST(json_extract(props, '$.k') AS BIGINT) AS k_val
-    FROM events
-    """,
-)
-def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON scalar extraction from the props column (SURVEY §2.11)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k_val"),
-    )
-
-
-_PROFILE_COLS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"]
-
-
-@register(
-    "table_profile",
-    oracle=" UNION ALL ".join(
-        f"""
-    SELECT '{c}' AS col_name,
-           count(*) - count({c}) AS n_nulls,
-           count(DISTINCT {c}) AS n_distinct,
-           CAST(min({c}) AS VARCHAR) AS min_val,
-           CAST(max({c}) AS VARCHAR) AS max_val
-    FROM orders
-    """
-        for c in _PROFILE_COLS
-    ),
-)
-def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-profiling sweep: per-column null count, exact distinct
-    count, min/max — the sanity pass before a table enters a pipeline.
-
-    One aggregate over the table; multiple exact COUNT(DISTINCT)s share
-    a single Expand-based shuffle. At 100 TB swap the exact distincts
-    for approx_count_distinct (one pass, no expand) — exact is kept
-    here because the DuckDB oracle hash-checks it."""
-    orders = load_table(spark, sf_dir, "orders")
-    aggs = []
-    for c in _PROFILE_COLS:
-        aggs += [
-            F.count(F.when(F.col(c).isNull(), 1)).alias(f"nn_{c}"),
-            F.count_distinct(F.col(c)).alias(f"nd_{c}"),
-            F.min(c).cast("string").alias(f"mn_{c}"),
-            F.max(c).cast("string").alias(f"mx_{c}"),
-        ]
-    one = orders.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{c}', nn_{c}, nd_{c}, mn_{c}, mx_{c}" for c in _PROFILE_COLS
-    )
-    return one.select(
-        F.expr(
-            f"stack({len(_PROFILE_COLS)}, {stack_args}) "
-            "AS (col_name, n_nulls, n_distinct, min_val, max_val)"
-        )
-    )
-
-
-@register(
-    "rolling_time_range_window",
-    oracle="""
-    SELECT event_id, user_id, epoch_ms(ts) AS ts_ms,
-           round(sum(value) OVER (
-               PARTITION BY user_id ORDER BY epoch_ms(ts)
-               RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW
-           ), 2) AS trailing_1h_v,
-           CAST(count(*) OVER (
-               PARTITION BY user_id ORDER BY epoch_ms(ts)
-               RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW
-           ) AS BIGINT) AS trailing_1h_n
-    FROM events
-    """,
-)
-def rolling_time_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 1-hour RANGE-frame window per user (time-based, not
-    row-based — two events 1 ms apart share the same trailing hour).
-    The rolling-feature generator of a behavioral model; one
-    user-partitioned sort, both aggregates share the frame."""
-    from collective_als_spark.sources import load_table as _lt
-
-    ev = _lt(spark, sf_dir, "events")
-    ms = (F.unix_micros("ts") / 1000).cast("bigint")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(ms)
-        .rangeBetween(-3600000, Window.currentRow)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        ms.alias("ts_ms"),
-        F.round(F.sum("value").over(w), 2).alias("trailing_1h_v"),
-        F.count(F.lit(1)).over(w).alias("trailing_1h_n"),
-    )
-
-
-@register(
-    "equiwidth_histogram",
-    oracle="""
-    WITH rng AS (
-        SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM orders
-    ),
-    binned AS (
-        SELECT least(CAST(floor((o_totalprice - rng.lo)
-                                / ((rng.hi - rng.lo) / 20.0)) AS INTEGER),
-                     19) AS bin
-        FROM orders, rng
-    )
-    SELECT bin, count(*) AS n
-    FROM binned GROUP BY bin
-    """,
-)
-def equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """20-bin equi-width histogram of order totals: global min/max as a
-    1-row broadcast, then a map-side-combinable bin count — the
-    two-pass histogram every profiler/BI layer runs, no sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    rng = orders.agg(
-        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
-    )
-    width = (F.col("hi") - F.col("lo")) / 20.0
-    bin_col = F.least(
-        F.floor((F.col("o_totalprice") - F.col("lo")) / width).cast("int"),
-        F.lit(19),
-    )
-    return (
-        orders.join(F.broadcast(rng))
-        .select(bin_col.alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 

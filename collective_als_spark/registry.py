@@ -40,23 +40,16 @@ def _ensure_loaded() -> None:
 
 # Driver-visibility ordering. The driver checks exactly the first 50
 # registered queries, so registration order decides which operators get
-# a CORRECTNESS row. Round-3 consolidation (r02 verdict #1): duplicate
-# SURVEY-§2 representatives collapsed — affine_recode now also carries
-# the date->millis recode (P7+F2+F3 in one slot, matching the
-# reference's single projection), rank_range_filter + chrono_split_sizes
-# witness the two-phase global rank (W2) so chrono_rank's slot is freed,
-# rmse_mae witnesses P5+A10 so the rows-only als_regression_eval drops
-# below the cap, and one representative survives per redundant SQL
-# family (subqueries, window frames, top-k-per-group, join-aggs,
-# rollup-vs-grouping-sets). The ten freed slots promote extension
-# oracles that never had a driver row. The §2 witness map below
-# (SURVEY2_WITNESSES) + tests/test_registration.py enforce that every
-# §2 operator keeps >=1 representative inside the cap. Unlisted queries
-# append in registration order.
+# a CORRECTNESS row. One representative survives per SURVEY §2 operator
+# and per operator family; the SURVEY2_WITNESSES map below and
+# tests/test_registration.py enforce that every §2 operator keeps >=1
+# witness inside the cap. Names below the cap line stay checked by
+# pytest (tests/test_oracle_parity.py and the plan/rows-only sweeps).
+# Unlisted queries append in registration order.
 DRIVER_CAP = 50
 
 _PRIORITY: list[str] = [
-    # -- multimodal north star (upgraded to hash-checked in r03)
+    # -- multimodal north star
     "token_count_by_source", "pipeline_clean_corpus", "multimodal_features",
     "embedding_neardup_pairs", "dedup_clusters", "chrono_split_sizes",
     "asof_join_purchase_click", "explode_dictionary",
@@ -67,186 +60,57 @@ _PRIORITY: list[str] = [
     "pair_inner_join", "full_outer_merge", "gramian_yty", "sql_passthrough",
     "pricing_summary", "ranking_metrics_at_k",
     "cmf_fit_predict", "cmf_fit_3entity",
-    # r04 promotion (r03 verdict #4): the implicit-feedback fit (L5/Q6,
-    # the reference's most idiosyncratic semantics) gets a driver row;
-    # running_window_frame demoted (window frames keep in-cap witnesses
-    # via topk_per_group + sessionization, and stay pytest-oracle-checked)
+    # the implicit-feedback fit (L5/Q6): the reference's most
+    # idiosyncratic semantics
     "cmf_fit_implicit",
-    # r05 swap (r04 verdict #6): the quality GATE (fit -> chrono holdout
-    # -> threshold booleans vs a constant oracle) takes
-    # cmf_recommend_topk's slot — a hash-green row that actually asserts
-    # fit quality under the driver; recommend_topk stays rows-only
-    # checked by pytest below the cap
+    # fit -> chronological holdout -> threshold booleans against a
+    # constant oracle: the one driver row that asserts fit quality
     "cmf_quality_gate",
-    # -- LLM-pipeline north star
-    # r11 swap (r10 verdict #3): minhash_signature demoted (its
-    # signatures are recomputed inside in-cap lsh_candidate_pairs;
-    # the dedup family keeps exact/lsh/embedding/clusters/prefix
-    # in-cap) for lake_predicate_dml — arbitrary-predicate DML with
-    # the mixed-precedence predicate under the oracle
+    # -- LLM-pipeline north star; lake_predicate_dml puts the
+    # mixed-precedence DML predicate under the oracle
     "exact_dedup", "lake_predicate_dml", "lsh_candidate_pairs",
-    # r05 swap: lake_snapshot_lifecycle (the commit protocol end-to-end
-    # under the oracle: CAS appends, copy-on-write merge/delete, time
-    # travel — the lake tier's first driver row) takes
-    # ngram_jaccard_pairs' slot; ngram_jaccard shares its ORACLE with
-    # in-cap prefix_jaccard_pairs (prefix filtering is lossless, same
-    # result set) and stays pytest-oracle-checked below the cap
-    # r06 swap: simhash_fingerprint demoted (the dedup family keeps six
-    # in-cap witnesses: exact/minhash/lsh/embedding/clusters/prefix;
-    # simhash + its banded pairs stay pytest-oracle-checked below) for
-    # lake_mor_upsert_nullstats — the merge-on-read upsert + null-count
-    # skipping tier under the driver
     "lake_mor_upsert_nullstats",
     "lake_snapshot_lifecycle", "ann_topk_cosine",
-    # r11 swap: doc_fingerprint demoted (the fingerprint family keeps
-    # winnowing coverage pytest-oracle-checked below; text keeps
-    # text_quality_metrics + lang_id in-cap) for snapshot_batch_read —
-    # the pure-python DSv2 batch DataSource with filter pushdown
-    # r12 swap (r11 verdict #3): lang_id_heuristic demoted (the text
-    # family keeps text_quality_metrics in-cap; lang-ID stays
-    # pytest-oracle-checked below) for lake_sql_dml — the SQL DML
-    # dispatcher end-to-end, now incl. the conditional multi-clause
-    # MERGE under the driver hash
     "text_quality_metrics", "lake_sql_dml", "snapshot_batch_read",
-    # -- extended SQL coverage, one representative per family
-    # r09 promotions (r08 verdict #4): the four round-8 oracles enter
-    # the cap; four redundant family members demote (all stay
-    # pytest-oracle-checked below): semi_anti_join + exists_subquery
-    # (the subquery/semi-join family keeps star_join + topk_per_group
-    # in-cap and in/scalar-subquery witnesses below), table_profile (a
-    # profiling agg), range_join_attribution (asof_join stays the
-    # in-cap range-join witness)
+    # -- one representative per family
     "star_join_revenue", "topk_per_group",
-    # CDC apply tier: r11 swap (r10 verdict #3) — lake_tracked_apply
-    # (cross-batch sequence tracking, the strictly-harder DLT shape)
-    # takes lake_apply_changes' slot; the single-batch apply stays
-    # pytest-oracle-checked below the cap
+    # cross-batch sequence tracking: the strictly harder CDC apply shape
     "lake_tracked_apply",
-    # r11 swap: lake_column_mapping (rename/drop by field id + time
-    # travel across the rename) takes lake_update_quality's slot —
-    # CoW UPDATE + band pruning now has its in-cap witness in
-    # lake_predicate_dml, and CDF imaging keeps lake_cdf_stream
     "lake_column_mapping",
-    # r14 swap (r13 verdict #4): gopher_quality_signals demoted (the
-    # text-quality family keeps text_quality_metrics in-cap and the
-    # repetition signals keep repetition_metrics +
-    # duplicate_ngram_fraction pytest-oracle-checked below the cap)
-    # for lake_merge_on_predicates — the arbitrary MERGE ON surface
-    # (differently-named equi keys via rename projection + row-
-    # granular residual conjuncts), the r13 round's hardest new
-    # machinery, under the driver hash
     "lake_merge_on_predicates",
-    # attribute-filtered ANN serve (single-stage filtering + deletes)
     "ann_filtered_topk",
-    # r12 swap (r11 verdict #3): sessionization demoted (the window
-    # family keeps topk_per_group in-cap; streaming keeps
-    # lake_cdf_stream; sessionization stays pytest-oracle-checked
-    # below) for lake_scd2_history — SCD TYPE 2 apply with the
-    # history-derived stale gate under the driver hash
     "lake_scd2_history",
-    # -- r03 promotions: extension oracles never driver-checked before
-    # (r06: tfidf_term_stats demoted — the text family keeps
-    # text_quality_metrics/lang_id/doc_fingerprint in-cap and tfidf
-    # stays pytest-oracle-checked — for benchmark_decontamination, the
-    # GPT-3-style 8-gram eval-overlap gate)
     "benchmark_decontamination",
-    # r13 swap (r12 verdict #3): prefix_jaccard_pairs demoted (the
-    # PPJoin family keeps ngram_jaccard_pairs +
-    # substring_containment_pairs pytest-oracle-checked below the cap,
-    # and dedup keeps exact/lsh/embedding/clusters in-cap) for
-    # lake_merge_matrix — the FULL Delta MERGE clause matrix
-    # (conditional matched UPDATE vs DELETE, column-level INSERT, both
-    # NOT MATCHED BY SOURCE forms — the round-12 extra-candidate
-    # replan + survivor-transform machinery) under the driver hash
-    # r15 swap (r14 verdict #3): item_item_cosine demoted (the
-    # similarity family keeps ann_topk_cosine + ann_filtered_topk +
-    # embedding_neardup_pairs in-cap; item-item stays
-    # pytest-oracle-checked below the cap) for lake_identity_columns —
-    # the claim-CAS identity counter + per-partition assignment +
-    # r14's MERGE target-id carry, the hardest write-time column
-    # machinery, under the driver hash
     "lake_identity_columns", "lake_merge_matrix",
-    # r12 swap (r11 verdict #3): grouping_sets_agg demoted (the
-    # rollup/grouping-sets family keeps its pytest oracle below the
-    # cap and rollup_agg as the family twin) for lake_type_widening —
-    # the lossless type-widening ladder under the driver hash
     "lake_type_widening",
-    # r04 swap: substring_containment_pairs (lossless winnowing-candidate
-    # exact dedup, the novel r04 tier) replaces intersect_except (a
-    # trivially-correct set op that stays pytest-oracle-checked below);
-    # dq_expectations_suite (the fused Deequ-style constraint engine, a
-    # new r04 family) replaces exact_percentiles (a single-function agg
-    # that stays pytest-oracle-checked below)
-    # r06: substring_containment_pairs demoted (same lossless PPJoin
-    # family as in-cap prefix_jaccard_pairs; stays pytest-checked) for
-    # lake_cdf_stream — the snapshot table consumed as a structured
-    # stream (CDF source, DV deltas, writer change files), hash-pinned
     "lake_cdf_stream", "dq_expectations_suite",
-    # r04 swap: multimodal_ppm_decode (REAL byte-parsing image decode,
-    # hash-checked against the analytic pixel oracle) replaces
-    # psi_drift (stays pytest-oracle-checked below)
     "multimodal_ppm_decode",
-    # r05 swap: lake_incremental_view (deletion-vector deletes + the
-    # change feed + incremental view maintenance, the round's new
-    # storage tier, all in one hash-pinned lifecycle) takes
-    # trend_regression's slot (a single closed-form agg that stays
-    # pytest-oracle-checked below the cap)
     "lake_incremental_view",
     # ---------------- below the driver cap line (50) ----------------
-    # r15 demotion (stays pytest-oracle-checked; the similarity family
-    # keeps ann_topk_cosine/ann_filtered_topk/embedding_neardup_pairs
-    # in-cap)
-    "item_item_cosine",
-    # r14 demotion (stays pytest-oracle-checked; text-quality keeps
-    # text_quality_metrics in-cap, repetition keeps below-cap twins)
-    "gopher_quality_signals",
-    # r11 demotions (all stay pytest-oracle-checked; see the in-cap
-    # swap comments above for the family reasoning)
+    # family twins of in-cap witnesses
     "minhash_signature", "lake_apply_changes", "lake_update_quality",
     "doc_fingerprint",
-    # r13 demotion (stays pytest-oracle-checked; PPJoin family keeps
-    # below-cap twins, dedup keeps four in-cap witnesses)
     "prefix_jaccard_pairs",
-    # r12 demotions (all stay pytest-oracle-checked; see the in-cap
-    # swap comments above for the family reasoning)
-    "lang_id_heuristic", "sessionization", "grouping_sets_agg",
-    "semi_anti_join", "exists_subquery", "table_profile",
-    "range_join_attribution",
-    "trend_regression",
+    "lang_id_heuristic", "sessionization",
     "ngram_jaccard_pairs",
     "cmf_recommend_topk",
-    "intersect_except", "psi_drift", "exact_percentiles",
-    # -- §2 dupes demoted in r03 (still oracle-checked by pytest; their
-    #    §2 ops keep an in-cap witness per SURVEY2_WITNESSES)
-    "running_window_frame",
+    "psi_drift",
+    # §2 duplicates: their operators keep an in-cap witness per
+    # SURVEY2_WITNESSES
     "chrono_rank", "epoch_millis", "als_regression_eval",
     "movielens_parity_metrics",
-    "shipping_priority_top10", "lag_event_gap", "latest_event_per_user_type",
-    "in_subquery_high_value", "scalar_subquery_above_avg",
-    "returned_items_by_nation", "rollup_agg",
+    # the remaining extension queries
     "tumbling_window_agg",
-    "document_chunking", "quality_quantile_filter", "repetition_metrics",
+    "quality_quantile_filter",
     "deterministic_sample", "sequence_packing", "simhash_neardup_pairs",
-    "contamination_overlap", "embedding_quantize", "bm25_scores",
+    "contamination_overlap", "embedding_quantize",
     "bpe_token_count", "source_mixture_sample", "multimodal_frame_sample",
     "incremental_lsh_pairs", "hybrid_retrieval",
-    "stratified_sample_exact", "kfold_assign", "negative_sampling",
-    "scd2_intervals", "hourly_resample_gapfill",
-    "rolling_time_range_window", "equiwidth_histogram", "pipeline_training_prep",
-    "zorder_keys", "vocab_top_words", "word_bigram_counts",
-    "vocab_top_p_mass", "conversion_funnel", "salted_join_revenue",
-    "conditional_pivot", "json_extract_props", "array_functions_suite",
-    "pmi_bigrams",
-    "event_transition_matrix", "numeric_mask_stats", "pagerank_trade_graph",
-    "fuzzy_name_linkage", "embedding_covariance",
-    "chi_square_independence", "dq_audit", "triangle_count",
-    "zscore_outliers", "join_key_skew_profile",
-    "welch_ttest", "session_paths", "sliding_window_agg",
-    "rrf_fusion", "token_budget_allocation",
-    "cube_agg",
-    "distinct_count_stats",
-    "lead_ntile_window", "window_distribution_functions", "date_arithmetic",
-    "approx_distinct_quantile", "ann_topk_lsh", "ann_topk_ivf",
+    "kfold_assign",
+    "zorder_keys", "salted_join_revenue",
+    "sliding_window_agg",
+    "rrf_fusion",
+    "ann_topk_lsh", "ann_topk_ivf",
     "streaming_tumbling_agg", "streaming_stateful_totals",
     "streaming_static_enrich", "streaming_session_window", "streaming_dedup",
     "streaming_stream_join", "streaming_upsert_totals",

@@ -13,20 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-_MEM_UNITS = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-
-
-def _mem_bytes(s: str) -> int:
-    """JVM memory string ('8g', '512m', '1024') -> bytes; 0 if unparseable."""
-    s = s.strip().lower()
-    try:
-        if s and s[-1] in _MEM_UNITS:
-            return int(float(s[:-1]) * _MEM_UNITS[s[-1]])
-        return int(s)
-    except ValueError:
-        return 0
-
-
 def default_driver_memory() -> str:
     """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of the
     machine's physical RAM, at least 1 GiB and at most 48 GiB, so the JVM
@@ -43,18 +29,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus != "*" else 32
-    # Heap pre-touch is OPT-IN (r15 verdict #3): the -Xms8g
-    # -XX:+AlwaysPreTouch default helped one stall-prone host but
-    # tilted the acceptance bench regressed and made every test JVM
-    # pre-fault 8 GiB. Hosts with slow first-touch fault paths can set
-    # SPARK_GRAFT_XMS (e.g. "8g"; production executors would set
-    # Xms = Xmx). The flag is skipped when it would exceed the
-    # configured driver memory (Xms > Xmx fails JVM startup).
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
-    xms = os.environ.get("SPARK_GRAFT_XMS", "")
-    jvm_opts = ""
-    if xms not in ("", "0") and _mem_bytes(xms) <= _mem_bytes(driver_mem):
-        jvm_opts = f"-Xms{xms} -XX:+AlwaysPreTouch"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -72,11 +47,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
-        if k == "spark.driver.extraJavaOptions" and jvm_opts:
-            v = f"{jvm_opts} {v}"  # merge, don't silently drop the pre-touch
         builder = builder.config(k, v)
-    if jvm_opts and "spark.driver.extraJavaOptions" not in (extra_conf or {}):
-        builder = builder.config("spark.driver.extraJavaOptions", jvm_opts)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -266,9 +266,8 @@ def streaming_upsert_parquet(
     lacks natively (MERGE INTO, JDBC upsert): the batch id makes the
     write idempotent under retries — a replayed batch overwrites with
     identical content instead of double-counting. The merge itself is
-    a keep-latest union (old ∪ new, latest batch wins per key) — the
-    same compaction pattern as latest_event_per_user_type, executed
-    incrementally."""
+    a keep-latest union (old ∪ new, latest batch wins per key),
+    executed incrementally."""
     import os
     import tempfile
 
@@ -513,7 +512,7 @@ def _make_ewma_update(alpha: float):
 def streaming_ewma_user_value(
     spark: SparkSession, sf_dir: str, alpha: float = 0.3
 ) -> DataFrame:
-    """Streaming twin of the batch ``ewma_user_value`` recurrence: the
+    """Streaming EWMA e_i = α·x_i + (1−α)·e_{i−1}: the
     per-user exponentially-weighted average maintained as typed state
     across micro-batches (``applyInPandasWithState``) — the serving
     shape for decayed engagement scores that a nightly batch fold

@@ -15,13 +15,7 @@ from collective_als_spark.registry import oracle_queries, spark_queries
 from collective_als_spark.sources import load_table
 from tests.oracle_harness import compare
 
-NEW_ORACLE_QUERIES = [
-    "full_outer_merge",
-    "grouping_sets_agg",
-    "range_join_attribution",
-    "lead_ntile_window",
-    "date_arithmetic",
-]
+NEW_ORACLE_QUERIES = ["full_outer_merge"]
 
 
 @pytest.mark.parametrize("name", NEW_ORACLE_QUERIES)

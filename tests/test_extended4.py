@@ -36,15 +36,6 @@ def test_word_entropy_bounds(spark, sf_small):
         assert -1e-9 <= r.entropy <= math.log2(r.n_tokens) + 1e-9
 
 
-def test_winsorized_mean_inside_clip_bounds(spark, sf_small):
-    from collective_als_spark.registry import spark_queries
-
-    rows = spark_queries()["winsorized_stats"](spark, sf_small).collect()
-    for r in rows:
-        assert r.p05 <= r.wins_mean <= r.p95
-        assert r.wins_std >= 0
-
-
 def test_containment_catches_embedded_doc(spark):
     """A short doc fully contained in a longer one: containment ~1 in
     the A->B direction even though Jaccard is far below threshold."""
@@ -222,35 +213,6 @@ def test_dimsum_query_rows(spark, sf_small):
     rows = spark_queries()["item_item_dimsum"](spark, sf_small).collect()
     assert rows
     assert all(r.part_i < r.part_j and 0 < r.cosine_est <= 1.2 for r in rows)
-
-
-def test_compression_ratio_orders_text_classes(spark):
-    """zlib ratio must order: repetitive < prose-like < random."""
-    import random
-    import string
-
-    from pyspark.sql import functions as F
-    import zlib
-
-    rng = random.Random(9)
-    rep = "spam ham " * 200
-    prose = " ".join(
-        rng.choice(["the", "quick", "brown", "fox", "jumps", "lazily", "over"])
-        for _ in range(400)
-    )
-    noise = "".join(rng.choice(string.ascii_lowercase + " ") for _ in range(1600))
-    vals = {}
-    for name, t in [("rep", rep), ("prose", prose), ("noise", noise)]:
-        vals[name] = len(zlib.compress(t.encode(), 6)) / len(t.encode())
-    assert vals["rep"] < vals["prose"] < vals["noise"]
-
-    from collective_als_spark.registry import spark_queries
-
-    rows = spark_queries()["compression_ratio_quality"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert rows
-    assert all(0 < r.min_ratio <= r.mean_ratio <= r.max_ratio for r in rows)
 
 
 def test_pq_topk_never_returns_self_pair(spark, sf_small):

@@ -12,7 +12,7 @@ that matter at 100 TB:
 
 Queries that execute work at plan-build time (CMF fits, k-means,
 streaming drives) are skipped here — their execution tests live in
-test_cmf.py / test_extended2.py.
+test_cmf.py, test_extended2.py (streaming) and test_extended6.py.
 """
 
 from __future__ import annotations
@@ -31,39 +31,15 @@ CROSS_JOIN_ALLOWED = {
     # scale path is audited via its own recall test in test_similarity
     "embedding_neardup_pairs",
     # single-row corpus-stats frame broadcast to every doc (scalar join)
-    "bm25_scores",
     "source_mixture_sample",
-    "equiwidth_histogram",
     "hybrid_retrieval",
-    # users x dictionary-sized broadcast(event types): a genuine
-    # dimension cross, bounded by |types|
-    "negative_sampling",
-    # 1-row scalar broadcasts (corpus size / token totals / node count)
+    # 1-row scalar broadcasts (corpus size / token totals)
     "unigram_logprob_score",
-    "bigram_logprob_score",
-    # 1-row total broadcast + 4-literal-row k-probe NLJ against the vocab
-    "vocab_coverage_curve",
-    "tfidf_term_stats",
-    "pmi_bigrams",
-    "pagerank_trade_graph",
-    "chi_square_independence",
-    "triangle_count",
-    "join_key_skew_profile",
     "psi_drift",
     "rrf_fusion",
-    "token_budget_allocation",
-    # r04: 1-row corpus-total broadcast (scalar join)
     "source_kl_divergence",
-    # r04: 1-row 0.05%%-of-total threshold broadcast gating the HAVING
-    "important_parts_q11",
-    # r04: 1-row global-average broadcast gating the anti join
-    "dormant_segment_balance_q22",
-    # r04: two 1-row count frames joined for the closing rate
-    "timed_funnel_conversion",
-    # r04: 1-row seed frontier — Catalyst constant-folds the equi key
-    # (node == 0), so the graph-bounded hop joins plan as BNLJ over the
-    # localCheckpointed |nations|^2 edge frame
-    "nation_trade_bfs",
+    # 1-row total broadcast + 4-literal-row k-probe NLJ against the vocab
+    "vocab_coverage_curve",
 }
 
 # build() executes eagerly (fit / stream drive / label propagation) —

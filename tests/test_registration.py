@@ -85,56 +85,7 @@ def test_registry_priority_ordering():
                  "rank_range_filter", "orderby_limit",
                  "rmse_mae", "cmf_fit_predict"]:
         assert must in head, f"{must} fell below the driver cap"
-    # r03 promotions (verdict #1): extension oracles that never had a
-    # driver row must now sit inside the cap. r04 swapped three of the
-    # redundant SQL-family slots (intersect_except, psi_drift,
-    # exact_percentiles — all still pytest-oracle-checked below the
-    # cap) for the round's novel witnesses: exact substring
-    # containment, the REAL PPM decode, and the fused Deequ-style
-    # constraint suite.
-    # r05 swapped trend_regression (still pytest-oracle-checked below
-    # the cap) for lake_incremental_view — deletion vectors + change
-    # feed + incremental view maintenance under one driver hash.
-    # r06 swapped tfidf_term_stats, substring_containment_pairs and
-    # simhash_fingerprint (all still pytest-oracle-checked below the
-    # cap, their families keep in-cap witnesses) for the round's novel
-    # tiers: benchmark_decontamination, lake_cdf_stream and
-    # lake_mor_upsert_nullstats.
-    # r09 swapped semi_anti_join, exists_subquery, table_profile and
-    # range_join_attribution (all still pytest-oracle-checked below
-    # the cap; the subquery/semi-join and range-join families keep
-    # in-cap witnesses via star_join/topk_per_group/asof_join) for the
-    # four round-8 oracles.
-    # r11 swapped minhash_signature, lake_apply_changes,
-    # lake_update_quality and doc_fingerprint (all still
-    # pytest-oracle-checked below the cap; their families keep in-cap
-    # witnesses — see registry._PRIORITY) for the four r09 oracles:
-    # lake_predicate_dml (with the mixed-precedence predicate),
-    # lake_tracked_apply, lake_column_mapping, snapshot_batch_read.
-    # r12 swapped lang_id_heuristic, sessionization and
-    # grouping_sets_agg (all still pytest-oracle-checked below the
-    # cap; text keeps text_quality_metrics, windows keep
-    # topk_per_group, rollup_agg twins grouping sets) for the three
-    # r11 oracles: lake_sql_dml (SQL DML dispatcher incl. conditional
-    # MERGE), lake_scd2_history, lake_type_widening.
-    # r13 swapped prefix_jaccard_pairs (still pytest-oracle-checked
-    # below the cap; the PPJoin family keeps ngram_jaccard_pairs and
-    # substring_containment_pairs there, dedup keeps
-    # exact/lsh/embedding/clusters in-cap) for lake_merge_matrix —
-    # the full Delta MERGE clause matrix under the driver hash
-    # (r12 verdict #3).
-    # r14 swapped gopher_quality_signals (still pytest-oracle-checked
-    # below the cap; text-quality keeps text_quality_metrics in-cap,
-    # repetition keeps repetition_metrics + duplicate_ngram_fraction
-    # below) for lake_merge_on_predicates — the arbitrary MERGE ON
-    # surface (rename-projected keys + row-granular residual) under
-    # the driver hash (r13 verdict #4).
-    # r15 swapped item_item_cosine (still pytest-oracle-checked below
-    # the cap; the similarity family keeps ann_topk_cosine +
-    # ann_filtered_topk + embedding_neardup_pairs in-cap) for
-    # lake_identity_columns — the claim-CAS identity counter +
-    # per-partition assignment + MERGE target-id carry under the
-    # driver hash (r14 verdict #3).
+    # family representatives that must keep their driver row
     for promoted in ["lake_identity_columns",
                      "lake_merge_matrix",
                      "lake_merge_on_predicates",
@@ -169,3 +120,26 @@ def test_survey2_operators_witnessed_inside_cap():
             f"SURVEY §2 operator {op} has no witness inside the first "
             f"{DRIVER_CAP} driver slots (witnesses: {witnesses})"
         )
+
+
+def test_name_lists_are_registered():
+    """Every name the registry and the harnesses list is a registered
+    query, and _PRIORITY has no duplicates. _ordered_names() drops an
+    unknown name silently, so a stale name would otherwise vanish."""
+    import bench
+    from collective_als_spark.registry import _PRIORITY, SURVEY2_WITNESSES, spark_queries
+    from tests.test_plan_audit import CROSS_JOIN_ALLOWED, SKIP
+
+    registered = set(spark_queries())
+    lists = {
+        "registry._PRIORITY": _PRIORITY,
+        "registry.SURVEY2_WITNESSES": [n for ws in SURVEY2_WITNESSES.values() for n in ws],
+        "bench.HEADLINE": bench.HEADLINE,
+        "test_plan_audit.CROSS_JOIN_ALLOWED": CROSS_JOIN_ALLOWED,
+        "test_plan_audit.SKIP": SKIP,
+    }
+    for where, names in lists.items():
+        stale = sorted(set(names) - registered)
+        assert not stale, f"{where} names unregistered queries: {stale}"
+    dupes = sorted({n for n in _PRIORITY if _PRIORITY.count(n) > 1})
+    assert not dupes, f"registry._PRIORITY repeats {dupes}"
