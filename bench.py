@@ -35,6 +35,9 @@ HEADLINE = [
     # round-3 additions (r02 verdict #5): track the round-2 operator
     # families' cost per-round
     "prefix_jaccard_pairs",
+    "item_item_cosine",
+    "pagerank_trade_graph",
+    "tfidf_term_stats",
     # round-3 new families: winnowing fingerprints, corpus-LM scoring
     "winnowing_fingerprints",
     "unigram_logprob_score",
@@ -45,11 +48,15 @@ HEADLINE = [
     "source_kl_divergence",
     "substring_containment_pairs",
     "multimodal_ppm_decode",
-    # round-4 session-2 family: the fused DQ constraint suite
+    # round-4 session-2 families: the fused DQ constraint suite,
+    # seasonal anomaly scoring
     "dq_expectations_suite",
-    # round-5 families: the oracle-checked CMF quality gate,
+    "seasonal_hourly_anomalies",
+    # round-5 families: output-bounded neighbor lists (the scale-ramp
+    # finding's production form), the oracle-checked CMF quality gate,
     # the lake commit protocol end-to-end (CAS appends, stats+bloom
     # pruned merge/delete, time travel on a scratch table)
+    "item_item_topk",
     "cmf_quality_gate",
     "lake_snapshot_lifecycle",
     # deletion vectors + change feed + incremental view maintenance

@@ -1,6 +1,6 @@
 """Round-3 extension set 2: substring-granular fingerprinting,
-snapshot diffing, language confusion, vocabulary coverage and feature
-hashing — each a standard large-pipeline pattern, oracle-checked.
+product-analytics cohorts, serving-shaped similarity, and snapshot
+diffing — each a standard large-pipeline pattern, oracle-checked.
 
 Scale notes per operator; windows are always key-partitioned and the
 only broadcasts are dimension- or 1-row-sized.
@@ -8,7 +8,8 @@ only broadcasts are dimension- or 1-row-sized.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from collective_als_spark.functions import text as TX
@@ -87,6 +88,151 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return per_doc.select("doc_id", F.explode(fps).alias("fp"))
+
+
+@register(
+    "retention_cohorts",
+    oracle="""
+    WITH firsts AS (
+        SELECT user_id,
+               CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
+        FROM events GROUP BY user_id
+    ),
+    activity AS (
+        SELECT e.user_id, f.cohort_week,
+               CAST(date_diff('day', f.cohort_week,
+                              CAST(date_trunc('week', e.ts) AS DATE)) / 7
+                    AS INTEGER) AS week_offset
+        FROM events e JOIN firsts f USING (user_id)
+    )
+    SELECT cohort_week, week_offset,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS active_users
+    FROM activity
+    GROUP BY cohort_week, week_offset
+    """,
+)
+def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly retention cohorts: users grouped by first-activity week,
+    counted distinct in each subsequent week offset — the standard
+    product-analytics triangle. Two key-partitioned shuffles (per-user
+    min, then cohort×offset count-distinct); the user→cohort frame is
+    user-dimension-sized and broadcastable."""
+    ev = load_table(spark, sf_dir, "events")
+    firsts = ev.groupBy("user_id").agg(
+        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
+    )
+    activity = ev.join(F.broadcast(firsts), "user_id").select(
+        "user_id",
+        "cohort_week",
+        (
+            F.datediff(F.date_trunc("week", "ts").cast("date"), F.col("cohort_week"))
+            / 7
+        )
+        .cast("int")
+        .alias("week_offset"),
+    )
+    return activity.groupBy("cohort_week", "week_offset").agg(
+        F.countDistinct("user_id").cast("bigint").alias("active_users")
+    )
+
+
+@register(
+    "equidepth_histogram",
+    oracle="""
+    WITH t AS (
+        SELECT event_type, value,
+               ntile(10) OVER (PARTITION BY event_type
+                               ORDER BY value, event_id) AS decile
+        FROM events
+    )
+    SELECT event_type, CAST(decile AS INTEGER) AS decile,
+           CAST(count(*) AS BIGINT) AS n,
+           round(min(value), 4) AS lo,
+           round(max(value), 4) AS hi
+    FROM t GROUP BY event_type, decile
+    """,
+)
+def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth (quantile-bucket) histogram per event type via ntile
+    — the equal-population companion to ``equiwidth_histogram``; bucket
+    bounds double as a quantile sketch. One type-keyed window + one
+    aggregate; tie order pinned by event_id for cross-engine
+    determinism."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("event_type").orderBy("value", "event_id")
+    return (
+        ev.withColumn("decile", F.ntile(10).over(w))
+        .groupBy("event_type", F.col("decile").cast("int").alias("decile"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.round(F.min("value"), 4).alias("lo"),
+            F.round(F.max("value"), 4).alias("hi"),
+        )
+    )
+
+
+@register(
+    "also_bought_topk",
+    oracle="""
+    WITH ui AS (
+        SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS i
+        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    ),
+    deg AS (SELECT u, count(*) AS n_items FROM ui GROUP BY u),
+    ui2 AS (
+        SELECT ui.u, ui.i FROM ui JOIN deg ON deg.u = ui.u
+        WHERE deg.n_items <= 200
+    ),
+    icnt AS (SELECT i, count(*) AS n_i FROM ui2 GROUP BY i),
+    pairs AS (
+        SELECT a.i AS part_i, b.i AS part_j, count(*) AS n_ij
+        FROM ui2 a JOIN ui2 b ON a.u = b.u AND a.i < b.i
+        GROUP BY a.i, b.i
+        HAVING count(*) >= 3
+    ),
+    scored AS (
+        SELECT p.part_i, p.part_j,
+               round(p.n_ij / sqrt(ci.n_i * cj.n_i), 6) AS cosine
+        FROM pairs p
+        JOIN icnt ci ON ci.i = p.part_i
+        JOIN icnt cj ON cj.i = p.part_j
+    ),
+    directed AS (
+        SELECT part_i AS item, part_j AS rec, cosine FROM scored
+        UNION ALL
+        SELECT part_j, part_i, cosine FROM scored
+    ),
+    ranked AS (
+        SELECT item, rec, cosine,
+               row_number() OVER (PARTITION BY item
+                                  ORDER BY cosine DESC, rec) AS rk
+        FROM directed
+    )
+    SELECT item, rec, cosine, CAST(rk AS INTEGER) AS rk
+    FROM ranked WHERE rk <= 3
+    """,
+)
+def also_bought_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """"Customers also bought": top-3 most-similar items per item from
+    the co-occurrence cosine — the serving-shaped projection of
+    `item_item_cosine` (directed both ways, item-keyed top-k window
+    with WindowGroupLimit pushdown)."""
+    from collective_als_spark.queries.extended3 import item_item_cosine
+
+    pairs = item_item_cosine(spark, sf_dir)
+    directed = pairs.select(
+        F.col("part_i").alias("item"), F.col("part_j").alias("rec"), "cosine"
+    ).unionByName(
+        pairs.select(
+            F.col("part_j").alias("item"), F.col("part_i").alias("rec"), "cosine"
+        )
+    )
+    w = Window.partitionBy("item").orderBy(F.desc("cosine"), "rec")
+    return (
+        directed.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("item", "rec", "cosine", F.col("rk").cast("int").alias("rk"))
+    )
 
 
 @register(
@@ -270,6 +416,68 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "bigram_logprob_score",
+    oracle="""
+    WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    uni AS (
+        SELECT unnest(ws) AS w1 FROM t
+    ),
+    ucnt AS (SELECT w1, count(*) AS c1 FROM uni GROUP BY w1),
+    vsize AS (SELECT count(*) AS v FROM ucnt),
+    bg AS (
+        SELECT doc_id,
+               unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]))
+                   AS bigram
+        FROM t
+    ),
+    bcnt AS (SELECT bigram, count(*) AS c12 FROM bg GROUP BY bigram)
+    SELECT bg.doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           round(avg(ln((bcnt.c12 + 0.5)
+                        / (ucnt.c1 + 0.5 * vsize.v))), 4) AS avg_logprob
+    FROM bg
+    JOIN bcnt USING (bigram)
+    JOIN ucnt ON ucnt.w1 = string_split(bg.bigram, ' ')[1]
+    CROSS JOIN vsize
+    GROUP BY bg.doc_id
+    """,
+)
+def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bigram-LM document quality score with add-½ smoothing:
+    mean ln p(w_i | w_{i−1}) over each document's adjacent word pairs —
+    one LM order above ``unigram_logprob_score``, the direction of the
+    CCNet/KenLM perplexity filter. Counting shuffles are vocabulary-
+    and bigram-vocabulary-sized (map-side combinable); the per-doc
+    score joins each doc's bigrams against the two count frames
+    (bigram-keyed, then first-word-keyed) and aggregates doc-keyed;
+    |V| is a 1-row broadcast."""
+    docs = load_table(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    t = docs.select("doc_id", ws.alias("ws"))
+    uni = t.select(F.explode("ws").alias("w1"))
+    ucnt = uni.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
+    vsize = ucnt.agg(F.count(F.lit(1)).alias("v"))
+    idx = F.sequence(F.lit(1), F.greatest(F.size("ws") - 1, F.lit(0)))
+    bigrams = F.when(
+        F.size("ws") >= 2,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice("ws", i, 2))),
+    ).otherwise(F.array().cast("array<string>"))
+    bg = t.select("doc_id", F.explode(bigrams).alias("bigram"))
+    bcnt = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
+    scored = (
+        bg.join(bcnt, "bigram")
+        .withColumn("w1", F.split("bigram", " ").getItem(0))
+        .join(ucnt, "w1")
+        .crossJoin(F.broadcast(vsize))
+    )
+    lp = F.log((F.col("c12") + 0.5) / (F.col("c1") + 0.5 * F.col("v")))
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
+        F.round(F.avg(lp), 4).alias("avg_logprob"),
+    )
+
+
 _FH_DIM = 64
 
 
@@ -313,4 +521,101 @@ def feature_hashing_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "feature_idx")
         .agg(F.sum("sgn").cast("bigint").alias("val"))
         .filter(F.col("val") != 0)
+    )
+
+
+@register(
+    "mad_outliers",
+    oracle="""
+    WITH med AS (
+        SELECT event_type,
+               percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS m
+        FROM events GROUP BY event_type
+    ),
+    dev AS (
+        SELECT e.event_id, e.event_type, e.value, med.m,
+               abs(e.value - med.m) AS ad
+        FROM events e JOIN med USING (event_type)
+    ),
+    mad AS (
+        SELECT event_type,
+               percentile_cont(0.5) WITHIN GROUP (ORDER BY ad) AS mad
+        FROM dev GROUP BY event_type
+    )
+    SELECT d.event_id, d.event_type, round(d.value, 4) AS value,
+           floor(0.6745 * (d.value - d.m) / mad.mad * 10000 + 0.5) / 10000
+               AS robust_z
+    FROM dev d JOIN mad USING (event_type)
+    WHERE abs(0.6745 * (d.value - d.m) / mad.mad) > 3.5
+    """,
+)
+def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MAD-based robust outliers (Iglewicz–Hoaglin modified z-score):
+    0.6745·(x−median)/MAD with the |z|>3.5 flag — unlike the
+    stddev-based ``zscore_outliers``, the estimator itself is immune to
+    the outliers it hunts. Two exact per-group medians (group-count-
+    sized frames broadcast back between passes); everything else is
+    map-side."""
+    ev = load_table(spark, sf_dir, "events")
+    med = ev.groupBy("event_type").agg(
+        F.percentile("value", F.lit(0.5)).alias("m")
+    )
+    dev = ev.join(F.broadcast(med), "event_type").withColumn(
+        "ad", F.abs(F.col("value") - F.col("m"))
+    )
+    mad = dev.groupBy("event_type").agg(
+        F.percentile("ad", F.lit(0.5)).alias("mad")
+    )
+    rz = 0.6745 * (F.col("value") - F.col("m")) / F.col("mad")
+    # rounding spelled as floor(x*1e4 + 0.5)/1e4 in BOTH engines: the
+    # engines' native round() disagree by 1 ulp when the double sits at
+    # a decimal half boundary (measured: 1 row in 4053 at sf0.1); this
+    # formulation is pure float ops, bit-identical on identical inputs
+    rz4 = F.floor(rz * 10000 + 0.5) / 10000
+    return (
+        dev.join(F.broadcast(mad), "event_type")
+        .filter(F.abs(rz) > 3.5)
+        .select(
+            "event_id",
+            "event_type",
+            F.round("value", 4).alias("value"),
+            rz4.alias("robust_z"),
+        )
+    )
+
+
+@register("compression_ratio_quality")
+def compression_ratio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document zlib compression ratio — the repetition/boilerplate
+    signal the Gopher/MassiveText filters use (highly repetitive text
+    compresses far below prose; near-random noise compresses above it).
+    Implemented as an Arrow-batched pandas UDF (the documented slow
+    path: no codegen DEFLATE exists) over a map-only projection —
+    embarrassingly parallel, no shuffle at all before the final
+    source rollup. Rows-only: DuckDB has no zlib; invariants pinned in
+    tests/test_extended4.py (repetitive < prose < random)."""
+    import zlib
+
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def comp_ratio(texts: pd.Series) -> pd.Series:
+        def ratio(t: str) -> float:
+            raw = t.encode("utf-8")
+            if not raw:
+                return 1.0
+            return round(len(zlib.compress(raw, 6)) / len(raw), 6)
+
+        return texts.map(ratio)
+
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select("source", comp_ratio(F.col("text")).alias("cr"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.round(F.avg("cr"), 4).alias("mean_ratio"),
+            F.round(F.min("cr"), 4).alias("min_ratio"),
+            F.round(F.max("cr"), 4).alias("max_ratio"),
+        )
     )

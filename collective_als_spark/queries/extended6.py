@@ -2,10 +2,12 @@
 (duplicate-n-gram fraction, MOSS overlap reports, exact substring
 containment at scale), distribution-drift scoring between corpus
 slices, leakage-safe dataset splitting, a trained quality classifier,
-BPE merge learning, Pareto/ABC contribution analysis, multimodal
-curation and a fused data-quality suite — the remaining standard
-blocks of a pretraining-data pipeline, each oracle-checked (DuckDB)
-except the model fits.
+BPE merge learning, Holt level+trend smoothing, bounded-depth BFS,
+incremental rollup maintenance, mergeable HLL distinct sketches,
+time-constrained funnels, Pareto/ABC contribution analysis, and
+rolling exact medians — the remaining standard blocks of a
+pretraining-data pipeline and its surrounding analytics, each
+oracle-checked (DuckDB) except the model fits and sketch estimates.
 
 Scale notes per operator are in each docstring; the common themes:
 candidate generation is always fingerprint-banded (never all-pairs),
@@ -478,6 +480,306 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "holt_linear_user_value",
+    # NOTE: the oracle is a recursive CTE, not list_reduce — DuckDB
+    # 1.0.0's list_reduce with a STRUCT accumulator corrupts mid-fold
+    # field references (verified: acc.l reads the just-written level
+    # inside the trend expression on non-final steps), so the struct
+    # fold is not a faithful reference there. The per-position
+    # recursion below is plain IEEE double arithmetic in both engines.
+    oracle="""
+    WITH RECURSIVE s AS (
+        SELECT user_id,
+               ROW_NUMBER() OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS pos,
+               value::DOUBLE AS v
+        FROM events
+    ),
+    n AS (SELECT user_id, max(pos) AS mx FROM s GROUP BY user_id),
+    rec(user_id, pos, l, t) AS (
+        SELECT user_id, 1::BIGINT, v, 0.0::DOUBLE FROM s WHERE pos = 1
+        UNION ALL
+        SELECT r.user_id, r.pos + 1,
+               0.3::DOUBLE * s2.v + 0.7::DOUBLE * (r.l + r.t),
+               0.2::DOUBLE * ((0.3::DOUBLE * s2.v
+                               + 0.7::DOUBLE * (r.l + r.t)) - r.l)
+                   + 0.8::DOUBLE * r.t
+        FROM rec r JOIN s s2 ON s2.user_id = r.user_id AND s2.pos = r.pos + 1
+    )
+    SELECT r.user_id, CAST(n.mx AS BIGINT) AS n_events,
+           round(r.l, 6) AS level, round(r.t, 6) AS trend,
+           round(r.l + r.t, 6) AS forecast_1
+    FROM rec r JOIN n ON n.user_id = r.user_id AND r.pos = n.mx
+    """,
+)
+def holt_linear_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user Holt double-exponential smoothing (level + trend,
+    α=0.3, β=0.2) with a one-step forecast — the trend-aware upgrade
+    of the EWMA recurrence, the standard per-entity forecasting signal
+    (capacity planning, engagement trajectories). Like EWMA, the
+    recurrence l_i = α·x_i + (1−α)(l+t); t_i = β(l_i−l) + (1−β)t is
+    inexpressible as a SQL window frame, so it runs as ONE codegen
+    array fold over each user's ordered values with a struct
+    accumulator — one user-keyed shuffle, no global state, no UDF.
+
+    Cross-engine determinism: both engines fold identical (ts,
+    event_id)-ordered IEEE doubles with the same struct seed
+    {l: x_1, t: 0}, so results match exactly (DuckDB list_reduce
+    seeds with the first element; every oracle literal is cast to
+    DOUBLE to keep its decimal arithmetic out of the fold).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    arr = F.sort_array(F.collect_list(F.struct("ts", "event_id", "value")))
+    grouped = ev.groupBy("user_id").agg(arr.alias("arr"))
+    vals = F.transform(F.col("arr"), lambda x: x["value"].cast("double"))
+    alpha, beta = 0.3, 0.2
+
+    def step(acc, x):
+        new_l = F.lit(alpha) * x["l"] + F.lit(1 - alpha) * (acc["l"] + acc["t"])
+        new_t = F.lit(beta) * (new_l - acc["l"]) + F.lit(1 - beta) * acc["t"]
+        return F.struct(new_l.alias("l"), new_t.alias("t"))
+
+    hw = F.aggregate(
+        F.transform(
+            F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
+            lambda x: F.struct(x.alias("l"), F.lit(0.0).alias("t")),
+        ),
+        F.struct(F.element_at(vals, 1).alias("l"), F.lit(0.0).alias("t")),
+        step,
+    )
+    return grouped.select(
+        "user_id",
+        F.size(vals).cast("bigint").alias("n_events"),
+        F.round(hw["l"], 6).alias("level"),
+        F.round(hw["t"], 6).alias("trend"),
+        F.round(hw["l"] + hw["t"], 6).alias("forecast_1"),
+    )
+
+
+@register(
+    "nation_trade_bfs",
+    oracle="""
+    WITH RECURSIVE e AS (
+        SELECT DISTINCT s.s_nationkey AS src, c.c_nationkey AS dst
+        FROM lineitem l
+        JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        JOIN orders o ON o.o_orderkey = l.l_orderkey
+        JOIN customer c ON c.c_custkey = o.o_custkey
+        WHERE s.s_nationkey <> c.c_nationkey
+    ),
+    walk(node, hops) AS (
+        SELECT CAST(0 AS BIGINT), 0
+        UNION ALL
+        SELECT e.dst, w.hops + 1
+        FROM walk w JOIN e ON e.src = w.node
+        WHERE w.hops < 3
+    )
+    SELECT node AS nationkey, CAST(min(hops) AS INTEGER) AS hops
+    FROM walk GROUP BY node
+    """,
+)
+def nation_trade_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-depth BFS shortest-path over the directed
+    supplier-nation → customer-nation trade graph: hop distance from
+    nation 0, depth ≤ 3 — the relational traversal a recursive CTE
+    expresses, unrolled as frontier joins (the Pregel/GraphX pattern
+    as plain DataFrame ops, like `pagerank_trade_graph`).
+
+    Scale: edge derivation is the one fact-sized stage (lineitem⨝
+    orders on the order key + two broadcast dim hops), collapsed by
+    DISTINCT to a nation-pair frame (≤|nations|²) and materialized
+    ONCE with an eager localCheckpoint — without it each unrolled
+    frontier branch re-derives the edges from the fact table (measured
+    6 lineitem scans; Spark's ReuseExchange does not collapse the
+    branches). Each hop is then a frontier⨝edges broadcast join over
+    the tiny cached frame; the closing min-aggregate dedups multi-path
+    visits. Depth is a constant in the plan, rows per frontier are
+    graph-bounded, so the unroll is safe at any data scale (graph
+    size, not data size, drives the iteration count).
+    """
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    edges = (
+        li.join(s, s.s_suppkey == li.l_suppkey)
+        .join(o, o.o_orderkey == li.l_orderkey)
+        .join(c, c.c_custkey == o.o_custkey)
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    seed = spark.range(1).select(
+        F.lit(0).cast("bigint").alias("node"), F.lit(0).alias("hops")
+    )
+    frontiers = [seed]
+    frontier = seed
+    for _ in range(3):
+        frontier = (
+            frontier.join(F.broadcast(edges), frontier.node == edges.src)
+            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
+        )
+        frontiers.append(frontier)
+    walk = frontiers[0]
+    for f in frontiers[1:]:
+        walk = walk.unionByName(f)
+    return walk.groupBy(F.col("node").alias("nationkey")).agg(
+        F.min("hops").cast("int").alias("hops")
+    )
+
+
+_ROLLUP_CUTOFF = "2024-01-15"
+
+
+@register(
+    "incremental_rollup_merge",
+    oracle="""
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+               AS total_value,
+           min(value) AS min_v, max(value) AS max_v
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental aggregate maintenance: a materialized per-type
+    rollup is NOT recomputed from scratch when a new partition of
+    events lands — the base aggregate and the delta aggregate merge
+    algebraically (counts add, integer-cent sums add, min/max fold).
+    The oracle computes the same rollup directly over all events, so
+    the hash match IS the proof that the merge path equals the full
+    recompute — the correctness property every incremental pipeline
+    (hourly rollup + late partition, streaming upsert compaction)
+    depends on.
+
+    Scale: each side aggregates map-side-combined on event_type; the
+    merge re-aggregates two |types|-sized frames. At 100 TB the base
+    frame is a stored table — only the delta partition is scanned,
+    which is the whole point.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    cutoff = F.lit(_ROLLUP_CUTOFF).cast("timestamp")
+    cents = F.round(F.col("value") * 100).cast("bigint")
+
+    def rollup(df: DataFrame) -> DataFrame:
+        return df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(cents).alias("_cents"),
+            F.min("value").alias("min_v"),
+            F.max("value").alias("max_v"),
+        )
+
+    base = rollup(ev.filter(F.col("ts") < cutoff))
+    delta = rollup(ev.filter(F.col("ts") >= cutoff))
+    return (
+        base.unionByName(delta)
+        .groupBy("event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.round(F.sum("_cents") / 100.0, 2).alias("total_value"),
+            F.min("min_v").alias("min_v"),
+            F.max("max_v").alias("max_v"),
+        )
+    )
+
+
+@register("hll_incremental_distinct", oracle=None)
+def hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable distinct-count sketches: per-day HyperLogLog sketches
+    of active users (``hll_sketch_agg``) union-merged into per-type
+    totals (``hll_union_agg``) — the incremental form of COUNT
+    DISTINCT. A stored sketch per partition makes "distinct users this
+    quarter" a sketch-union over 90 tiny binary values instead of a
+    quarter-long shuffle; sketches also merge across engines (Apache
+    DataSketches format).
+
+    Rows-only (sketch estimates are approximate by design — no exact
+    SQL oracle); the accuracy bound vs exact count-distinct is pinned
+    in tests/test_extended6.py.
+
+    Scale: the daily sketch build is one map-side-combinable aggregate
+    per partition; the merge shuffles |days|×|types| sketch blobs
+    (~1.5 KB each at lgK=12), independent of row count.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.to_date("ts").alias("day")
+    ).agg(F.hll_sketch_agg("user_id").alias("sk"))
+    return (
+        daily.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_days"),
+            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users"),
+        )
+    )
+
+
+@register(
+    "timed_funnel_conversion",
+    oracle="""
+    WITH v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
+    conv AS (
+        SELECT v.event_id
+        FROM v
+        WHERE EXISTS (
+            SELECT 1 FROM events p
+            WHERE p.event_type = 'purchase'
+              AND p.user_id = v.user_id
+              AND p.ts > v.ts
+              AND p.ts <= v.ts + INTERVAL 1 HOUR
+        )
+    )
+    SELECT CAST((SELECT count(*) FROM v) AS BIGINT) AS n_views,
+           CAST((SELECT count(*) FROM conv) AS BIGINT) AS converted_views,
+           round((SELECT count(*) FROM conv)
+                 / CAST((SELECT count(*) FROM v) AS DOUBLE), 6) AS conversion_rate
+    """,
+)
+def timed_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-constrained conversion funnel: views that led to a purchase
+    by the same user within ONE HOUR — the product-analytics funnel
+    with an attribution window, stricter than the ordered-only
+    `conversion_funnel`. Each view is counted once no matter how many
+    qualifying purchases follow (left-semi semantics).
+
+    Scale: one user-keyed left-semi join with a time-band residual —
+    the same equi+range shape as `range_join_attribution`, so rows
+    co-group on user_id and the band predicate filters inside each
+    join group; no window, no self-cartesian. The three closing counts
+    collapse to two 1-row aggregates unioned map-side.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    v = ev.filter(F.col("event_type") == "view").select(
+        "event_id", F.col("user_id").alias("v_uid"), F.col("ts").alias("v_ts")
+    )
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_uid"), F.col("ts").alias("p_ts")
+    )
+    converted = v.join(
+        p,
+        (F.col("v_uid") == F.col("p_uid"))
+        & (F.col("p_ts") > F.col("v_ts"))
+        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
+        "left_semi",
+    )
+    n_v = v.agg(F.count(F.lit(1)).alias("n_views"))
+    n_c = converted.agg(F.count(F.lit(1)).alias("converted_views"))
+    return (
+        n_v.join(F.broadcast(n_c))
+        .select(
+            "n_views",
+            "converted_views",
+            F.round(
+                F.col("converted_views") / F.col("n_views").cast("double"), 6
+            ).alias("conversion_rate"),
+        )
+    )
+
+
+@register(
     "pareto_abc_parts",
     oracle="""
     WITH rev AS (
@@ -538,6 +840,46 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(cum * 10 <= F.col("_total") * 9, "B")
         .otherwise("C")
         .alias("abc_class"),
+    )
+
+
+@register(
+    "rolling_median_user_value",
+    oracle="""
+    SELECT event_id, user_id,
+           round(median(value) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6)
+               AS rolling_median
+    FROM events
+    """,
+)
+def rolling_median_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing exact MEDIAN over the last 5 events per user — the
+    robust rolling statistic (spike-resistant baseline) that built-in
+    window aggregates don't provide. Computed by collecting the
+    rows-frame into a bounded array, sorting it, and interpolating the
+    middle — identical to DuckDB's windowed ``median`` (quantile_cont
+    0.5 averages the two middles on even counts).
+
+    Scale: ONE user-keyed window (rows-frame bounded at 5 elements, so
+    the per-row array work is O(k log k) with k=5); no global window,
+    no UDF — the array sort/pick is codegen expression work.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-4, Window.currentRow)
+    )
+    arr = F.array_sort(F.collect_list(F.col("value").cast("double")).over(w))
+    n = F.size(arr)
+    lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
+    hi = F.element_at(arr, (n / 2 + 1).cast("int"))
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.round((lo + hi) / 2.0, 6).alias("rolling_median"),
     )
 
 

@@ -465,6 +465,52 @@ def incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "document_chunking",
+    oracle="""
+    WITH t AS (
+        SELECT doc_id, string_split(text, ' ') AS ws,
+               len(string_split(text, ' ')) AS n
+        FROM documents
+    ),
+    c AS (
+        SELECT doc_id, ws,
+               unnest(range(0, CAST(greatest(ceil((n - 32) * 1.0 / 32), 1) AS BIGINT))) AS cid
+        FROM t
+    )
+    SELECT doc_id, CAST(cid AS INTEGER) AS chunk_id,
+           CAST(len(ws[cid*32+1 : cid*32+64]) AS INTEGER) AS n_chunk_tokens,
+           md5(array_to_string(ws[cid*32+1 : cid*32+64], ' ')) AS chunk_hash
+    FROM c
+    """,
+)
+def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window chunking (64-token windows, stride 32) — the
+    context-length preprocessing step of an LLM training pipeline.
+    Chunk count = max(ceil((n - overlap) / stride), 1), so the final
+    window covers the tail without emitting fully-contained chunks.
+    Pure codegen (sequence + explode + slice), map-only: chunking 100 TB
+    is embarrassingly parallel and this plan keeps it that way."""
+    docs = load_table(spark, sf_dir, "documents")
+    ws = F.split(F.col("text"), " ")
+    n = F.size(ws)
+    n_chunks = F.greatest(
+        F.ceil((n - F.lit(32)).cast("double") / F.lit(32.0)).cast("int"), F.lit(1)
+    )
+    base = docs.select(
+        "doc_id",
+        ws.alias("ws"),
+        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
+    )
+    chunk = F.slice(F.col("ws"), F.col("chunk_id") * 32 + 1, 64)
+    return base.select(
+        "doc_id",
+        F.col("chunk_id").cast("int").alias("chunk_id"),
+        F.size(chunk).cast("int").alias("n_chunk_tokens"),
+        F.md5(F.concat_ws(" ", chunk)).alias("chunk_hash"),
+    )
+
+
+@register(
     "quality_quantile_filter",
     oracle=f"""
     WITH scored AS (
@@ -495,6 +541,32 @@ def quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("pr") >= 0.1)
         .select("doc_id", "source", "n_tokens", F.round("pr", 6).alias("pct_rank"))
+    )
+
+
+@register(
+    "repetition_metrics",
+    oracle="""
+    WITH w AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+    ),
+    cnt AS (SELECT doc_id, tok, count(*) AS c FROM w GROUP BY doc_id, tok)
+    SELECT doc_id,
+           round(1.0 - count(*) * 1.0 / sum(c), 6) AS dup_token_ratio,
+           round(max(c) * 1.0 / sum(c), 6) AS top_token_ratio
+    FROM cnt GROUP BY doc_id
+    """,
+)
+def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Repetition/boilerplate signals (Gopher-style quality filters):
+    duplicate-token ratio and most-frequent-token mass. Explode + two
+    map-side-combinable aggregations — no per-doc quadratic work."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    cnt = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    return cnt.groupBy("doc_id").agg(
+        F.round(1.0 - F.count(F.lit(1)) / F.sum("c"), 6).alias("dup_token_ratio"),
+        F.round(F.max("c") / F.sum("c"), 6).alias("top_token_ratio"),
     )
 
 
@@ -718,6 +790,89 @@ _BM25_TERMS = ["spark", "window", "join"]
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
+@register(
+    "bm25_scores",
+    oracle="""
+    WITH t AS (
+        SELECT doc_id,
+               len(string_split(text, ' ')) AS dl,
+               {tfs}
+        FROM documents
+    ),
+    g AS (
+        SELECT count(*) AS n,
+               sum(dl) * 1.0 / count(*) AS avgdl,
+               {dfs}
+        FROM t
+    )
+    SELECT doc_id, round({score}, 6) AS bm25
+    FROM t, g
+    WHERE {any_tf}
+    """.format(
+        tfs=",\n               ".join(
+            f"len(list_filter(string_split(text, ' '), w -> w = '{t}')) AS tf{i}"
+            for i, t in enumerate(_BM25_TERMS)
+        ),
+        dfs=",\n               ".join(
+            f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
+            for i in range(len(_BM25_TERMS))
+        ),
+        score=" + ".join(
+            f"(ln(1 + (n - df{i} + 0.5) / (df{i} + 0.5)) * tf{i} * {_BM25_K1 + 1} "
+            f"/ (tf{i} + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl)))"
+            for i in range(len(_BM25_TERMS))
+        ),
+        any_tf=" + ".join(f"tf{i}" for i in range(len(_BM25_TERMS))) + " > 0",
+    ),
+)
+def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 relevance scores for a fixed query (the retrieval scorer of
+    a RAG / data-curation stack), k1=1.2 b=0.75.
+
+    Scale shape: per-doc term frequencies are higher-order array
+    functions (map-only, codegen), corpus statistics (N, avgdl, df) are
+    ONE global aggregate broadcast back — so the whole scorer is one
+    tiny shuffle plus a map, no explode of the corpus, no join on
+    terms. Fixed-order summation keeps the oracle hash stable."""
+    docs = load_table(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    def _tf(term: str):
+        # NB: a 2-arg lambda would make F.filter pass (element, index)
+        return F.size(F.filter(ws, lambda w: w == F.lit(term)))
+
+    tf_cols = [_tf(t).alias(f"tf{i}") for i, t in enumerate(_BM25_TERMS)]
+    t = docs.select("doc_id", F.size(ws).alias("dl"), *tf_cols)
+    g = t.agg(
+        F.count(F.lit(1)).alias("n"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+        *[
+            F.sum((F.col(f"tf{i}") > 0).cast("int")).alias(f"df{i}")
+            for i in range(len(_BM25_TERMS))
+        ],
+    )
+    score = None
+    for i in range(len(_BM25_TERMS)):
+        idf = F.log(
+            1 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
+        )
+        s = (
+            idf
+            * F.col(f"tf{i}")
+            * (_BM25_K1 + 1)
+            / (
+                F.col(f"tf{i}")
+                + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+            )
+        )
+        score = s if score is None else score + s
+    any_tf = sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS))) > 0
+    return (
+        t.join(F.broadcast(g))
+        .filter(any_tf)
+        .select("doc_id", F.round(score, 6).alias("bm25"))
+    )
+
+
 _HYBRID_ORACLE = """
     WITH t AS (
         SELECT doc_id,
@@ -902,6 +1057,39 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "stratified_sample_exact",
+    oracle="""
+    WITH ranked AS (
+        SELECT doc_id, source,
+               row_number() OVER (
+                   PARTITION BY source
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               ) AS rk
+        FROM documents
+    )
+    SELECT doc_id, source, CAST(rk AS INTEGER) AS rk
+    FROM ranked WHERE rk <= 5
+    """,
+)
+def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-n-per-stratum sampling: 5 docs per source, chosen by
+    md5 order — a deterministic engine-stable draw (unlike seeded
+    random sampling, identical across partitionings and engines).
+    Source-partitioned window + WindowGroupLimit pushdown: the rank
+    filter prunes below the window, never materializing full ranks."""
+    from pyspark.sql import Window
+
+    docs = load_table(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    return (
+        docs.select("doc_id", "source", F.row_number().over(w).alias("rk"))
+        .filter(F.col("rk") <= 5)
+    )
+
+
+@register(
     "kfold_assign",
     oracle="""
     SELECT doc_id,
@@ -917,6 +1105,70 @@ def kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     h = TX.word_hash(F.concat(F.lit("fold|"), F.col("doc_id").cast("string")))
     return docs.select("doc_id", F.pmod(h, F.lit(5)).cast("int").alias("fold"))
+
+
+@register(
+    "negative_sampling",
+    oracle="""
+    WITH users AS (SELECT DISTINCT user_id FROM events),
+    types AS (SELECT DISTINCT event_type FROM events),
+    seen AS (
+        SELECT user_id, event_type FROM events
+        GROUP BY user_id, event_type HAVING count(*) >= 12
+    ),
+    negatives AS (
+        SELECT u.user_id, t.event_type
+        FROM users u CROSS JOIN types t
+        LEFT JOIN seen s
+          ON s.user_id = u.user_id AND s.event_type = t.event_type
+        WHERE s.user_id IS NULL
+    ),
+    picked AS (
+        SELECT user_id, event_type,
+               row_number() OVER (
+                   PARTITION BY user_id
+                   ORDER BY md5(CAST(user_id AS VARCHAR) || '|' || event_type)
+               ) AS rk
+        FROM negatives
+    )
+    SELECT user_id, event_type FROM picked WHERE rk <= 2
+    """,
+)
+def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Implicit-feedback negative sampling: up to 2 (user, event_type)
+    pairs WITHOUT a strong interaction (fewer than 12 events), picked
+    by deterministic hash order — the training-pair generator for
+    implicit recommenders (positives = strong pairs, negatives drawn
+    from the complement).
+
+    Scale shape: the item dimension is dictionary-sized (event types),
+    so candidates = users x broadcast(types) with an anti-join against
+    the seen pairs — one shuffle on the seen side; the per-user pick is
+    a user-partitioned window with group-limit pushdown. For a large
+    item universe this becomes hash-bucketed sampling per user; the
+    dictionary case is the common top-of-funnel shape."""
+    from pyspark.sql import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    users = ev.select("user_id").distinct()
+    types = ev.select("event_type").distinct()
+    seen = (
+        ev.groupBy("user_id", "event_type")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= 12)
+        .select("user_id", "event_type")
+    )
+    negatives = users.join(F.broadcast(types)).join(
+        seen, ["user_id", "event_type"], "left_anti"
+    )
+    w = Window.partitionBy("user_id").orderBy(
+        F.md5(F.concat_ws("|", F.col("user_id").cast("string"), "event_type"))
+    )
+    return (
+        negatives.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 2)
+        .select("user_id", "event_type")
+    )
 
 
 @register(
@@ -1024,6 +1276,198 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
         F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
+    )
+
+
+@register(
+    "pipeline_training_prep",
+    oracle="""
+    WITH hashed AS (
+        SELECT doc_id, source, text, md5(text) AS content_hash,
+               len(string_split(text, ' ')) AS n_tokens
+        FROM documents
+    ),
+    canonical AS (
+        SELECT * FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY content_hash ORDER BY doc_id
+            ) AS rn FROM hashed
+        ) WHERE rn = 1
+    ),
+    kept AS (SELECT * FROM canonical WHERE n_tokens >= 20),
+    chunks AS (
+        SELECT doc_id, source,
+               unnest(range(0, CAST(greatest(ceil((n_tokens - 32) * 1.0 / 32), 1)
+                                    AS BIGINT))) AS cid,
+               string_split(text, ' ') AS ws
+        FROM kept
+    )
+    SELECT source,
+           count(DISTINCT doc_id) AS n_docs,
+           count(*) AS n_chunks,
+           CAST(sum(len(ws[cid*32+1 : cid*32+64])) AS BIGINT) AS total_chunk_tokens
+    FROM chunks
+    GROUP BY source
+    """,
+)
+def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The north-star composition in ONE declarative plan: exact dedup
+    (keep lowest id per content hash) -> token-count quality floor ->
+    sliding-window chunking (64/32) -> per-source chunk accounting.
+
+    Catalyst fuses the whole thing: hash + window dedup + filter +
+    sequence/explode chunker + one aggregate — two shuffles
+    (content_hash, source) for the full corpus-to-training-chunks
+    path. This is the job a 100 TB pretraining prep actually runs."""
+    from pyspark.sql import Window
+
+    docs = load_table(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    hashed = docs.select(
+        "doc_id",
+        "source",
+        ws.alias("ws"),
+        F.md5("text").alias("content_hash"),
+        F.size(ws).alias("n_tokens"),
+    )
+    w = Window.partitionBy("content_hash").orderBy("doc_id")
+    kept = (
+        hashed.withColumn("rn", F.row_number().over(w))
+        .filter((F.col("rn") == 1) & (F.col("n_tokens") >= 20))
+    )
+    n_chunks = F.greatest(
+        F.ceil((F.col("n_tokens") - F.lit(32)).cast("double") / F.lit(32.0)).cast(
+            "int"
+        ),
+        F.lit(1),
+    )
+    chunks = kept.select(
+        "doc_id",
+        "source",
+        "ws",
+        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("cid"),
+    )
+    chunk_tokens = F.size(F.slice(F.col("ws"), F.col("cid") * 32 + 1, 64))
+    return chunks.groupBy("source").agg(
+        F.count_distinct("doc_id").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.sum(chunk_tokens.cast("bigint")).alias("total_chunk_tokens"),
+    )
+
+
+@register(
+    "vocab_top_words",
+    oracle="""
+    WITH w AS (
+        SELECT unnest(string_split(text, ' ')) AS word FROM documents
+    )
+    SELECT word, count(*) AS n
+    FROM w GROUP BY word
+    ORDER BY n DESC, word
+    LIMIT 1000
+    """,
+)
+def vocab_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary induction: top-1000 words by corpus frequency — the
+    first step of tokenizer training. Explode + map-side-combinable
+    count + TakeOrderedAndProject (top-k, never a global sort)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), "word")
+        .limit(1000)
+    )
+
+
+@register(
+    "word_bigram_counts",
+    oracle="""
+    WITH t AS (
+        SELECT string_split(text, ' ') AS ws FROM documents
+    ),
+    bg AS (
+        SELECT unnest(list_transform(range(1, len(ws)),
+                      i -> ws[i] || ' ' || ws[i+1])) AS bigram
+        FROM t
+    )
+    SELECT bigram, count(*) AS n
+    FROM bg GROUP BY bigram
+    HAVING count(*) >= 20
+    """,
+)
+def word_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Adjacent-pair (bigram) corpus counts above a support floor — the
+    merge-candidate statistics of BPE training and the raw counts of an
+    n-gram LM. Slice-based pair construction (same codegen shape as the
+    shingler), one count shuffle with map-side combine."""
+    docs = load_table(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    idx = F.sequence(F.lit(1), F.greatest(F.size(ws) - 1, F.lit(0)))
+    bigrams = F.when(
+        F.size(ws) >= 2,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, 2))),
+    ).otherwise(F.array().cast("array<string>"))
+    return (
+        docs.select(F.explode(bigrams).alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 20)
+    )
+
+
+@register(
+    "vocab_top_p_mass",
+    oracle="""
+    WITH w AS (
+        SELECT unnest(string_split(text, ' ')) AS word FROM documents
+    ),
+    cnt AS (SELECT word, count(*) AS n FROM w GROUP BY word),
+    tot AS (SELECT sum(n) AS total FROM cnt),
+    cum AS (
+        SELECT word, n,
+               sum(n) OVER (ORDER BY n DESC, word
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   AS mass_before
+        FROM cnt
+    )
+    SELECT word, n, round(COALESCE(mass_before, 0) * 1.0 / tot.total, 6) AS cum_share
+    FROM cum, tot
+    WHERE COALESCE(mass_before, 0) * 1.0 / tot.total < 0.9
+    """,
+)
+def vocab_top_p_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nucleus (top-p) vocabulary truncation: keep the most frequent
+    words that together cover 90% of token mass — the distributional
+    cutoff used for vocab pruning and sampling. Cumulative mass uses the
+    two-phase ``global_cumsum`` (operators/split.py): range-shuffle on
+    (n desc, word), per-partition window cumsum, broadcast offset add —
+    linear work per vocab entry and no single-task global window. (The
+    round-2 packed-array formulation was O(V²): ``aggregate(slice(arr,
+    1, i))`` re-scanned the prefix for every element — slower than the
+    window it avoided once V reaches real vocabulary sizes.)"""
+    from ..operators.split import global_cumsum
+
+    docs = load_table(spark, sf_dir, "documents")
+    cnt = (
+        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    cum = global_cumsum(
+        cnt,
+        [F.col("n").desc(), F.col("word")],
+        "n",
+        cumsum_col="mass_before",
+        total_col="total",
+    )
+    return (
+        cum.withColumn(
+            "cum_share", F.round(F.col("mass_before") / F.col("total"), 6)
+        )
+        .filter(F.col("mass_before") / F.col("total") < 0.9)
+        .select("word", "n", "cum_share")
     )
 
 
@@ -1178,4 +1622,79 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=8,
         rerank_depth=1_000_000,
         where="vec_id % 3 = 0",
+    )
+
+
+@register(
+    "gopher_quality_signals",
+    oracle="""
+    WITH w AS (
+        SELECT doc_id, string_split(text, ' ') AS l FROM documents
+    ),
+    sig AS (
+        SELECT doc_id,
+               CAST(len(l) AS INTEGER) AS n_words,
+               round(list_aggregate(list_transform(l, x -> length(x)), 'sum')
+                     * 1.0 / len(l), 6) AS mean_word_len,
+               round(1.0 - len(list_distinct(l)) * 1.0 / len(l), 6)
+                   AS dup_word_frac,
+               round(1.0 - len(list_distinct(
+                         list_transform(range(1, len(l)),
+                                        i -> l[i] || ' ' || l[i + 1])))
+                     * 1.0 / (len(l) - 1), 6) AS dup_2gram_frac
+        FROM w WHERE len(l) > 1
+    )
+    SELECT doc_id, n_words, mean_word_len, dup_word_frac, dup_2gram_frac,
+           (mean_word_len BETWEEN 3 AND 10
+            AND dup_word_frac < 0.7
+            AND dup_2gram_frac < 0.5) AS pass_gate
+    FROM sig
+    """,
+)
+def gopher_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition/quality signals per document: mean word
+    length, duplicate-word fraction, duplicate-2-gram fraction, and
+    the combined gate (the MassiveText filtering rules' word-level
+    members — line-level members degenerate on single-line docs).
+
+    Everything is JVM-evaluated array algebra over ONE split of the
+    text — transform/slice/array_distinct/aggregate higher-order
+    expressions (outside whole-stage codegen, as all HOFs are, but
+    never Python), no UDF, no shuffle (per-row projection): the shape
+    that filters a 100 TB crawl at scan speed."""
+    docs = load_table(spark, sf_dir, "documents")
+    w = F.split(F.col("text"), " ")
+    n = F.size(w)
+    grams = F.expr(
+        "transform(slice(split(text, ' '), 1, size(split(text, ' ')) - 1), "
+        "(x, i) -> concat(x, ' ', split(text, ' ')[i + 1]))"
+    )
+    mean_len = F.round(
+        F.aggregate(w, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
+        * F.lit(1.0)
+        / n,
+        6,
+    )
+    dup_w = F.round(
+        F.lit(1.0) - F.size(F.array_distinct(w)) * F.lit(1.0) / n, 6
+    )
+    dup_g = F.round(
+        F.lit(1.0) - F.size(F.array_distinct(grams)) * F.lit(1.0) / (n - 1),
+        6,
+    )
+    return (
+        docs.filter(n > 1)
+        .select(
+            "doc_id",
+            n.cast("int").alias("n_words"),
+            mean_len.alias("mean_word_len"),
+            dup_w.alias("dup_word_frac"),
+            dup_g.alias("dup_2gram_frac"),
+        )
+        .withColumn(
+            "pass_gate",
+            F.col("mean_word_len").between(3, 10)
+            & (F.col("dup_word_frac") < 0.7)
+            & (F.col("dup_2gram_frac") < 0.5),
+        )
     )

@@ -88,6 +88,7 @@ _PRIORITY: list[str] = [
     "lake_incremental_view",
     # ---------------- below the driver cap line (50) ----------------
     # family twins of in-cap witnesses
+    "item_item_cosine", "gopher_quality_signals",
     "minhash_signature", "lake_apply_changes", "lake_update_quality",
     "doc_fingerprint",
     "prefix_jaccard_pairs",
@@ -100,17 +101,27 @@ _PRIORITY: list[str] = [
     "chrono_rank", "epoch_millis", "als_regression_eval",
     "movielens_parity_metrics",
     # the remaining extension queries
+    "trend_regression", "intersect_except", "exact_percentiles",
     "tumbling_window_agg",
-    "quality_quantile_filter",
+    "document_chunking", "quality_quantile_filter", "repetition_metrics",
     "deterministic_sample", "sequence_packing", "simhash_neardup_pairs",
-    "contamination_overlap", "embedding_quantize",
+    "contamination_overlap", "embedding_quantize", "bm25_scores",
     "bpe_token_count", "source_mixture_sample", "multimodal_frame_sample",
     "incremental_lsh_pairs", "hybrid_retrieval",
-    "kfold_assign",
-    "zorder_keys", "salted_join_revenue",
-    "sliding_window_agg",
-    "rrf_fusion",
-    "ann_topk_lsh", "ann_topk_ivf",
+    "stratified_sample_exact", "kfold_assign", "negative_sampling",
+    "scd2_intervals", "hourly_resample_gapfill", "pipeline_training_prep",
+    "zorder_keys", "vocab_top_words", "word_bigram_counts",
+    "vocab_top_p_mass", "conversion_funnel", "salted_join_revenue",
+    "pmi_bigrams",
+    "event_transition_matrix", "numeric_mask_stats", "pagerank_trade_graph",
+    "fuzzy_name_linkage", "embedding_covariance",
+    "chi_square_independence", "dq_audit", "triangle_count",
+    "zscore_outliers", "join_key_skew_profile",
+    "welch_ttest", "session_paths", "sliding_window_agg",
+    "rrf_fusion", "token_budget_allocation",
+    "cube_agg",
+    "distinct_count_stats",
+    "approx_distinct_quantile", "ann_topk_lsh", "ann_topk_ivf",
     "streaming_tumbling_agg", "streaming_stateful_totals",
     "streaming_static_enrich", "streaming_session_window", "streaming_dedup",
     "streaming_stream_join", "streaming_upsert_totals",

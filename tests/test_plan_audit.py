@@ -31,15 +31,33 @@ CROSS_JOIN_ALLOWED = {
     # scale path is audited via its own recall test in test_similarity
     "embedding_neardup_pairs",
     # single-row corpus-stats frame broadcast to every doc (scalar join)
+    "bm25_scores",
     "source_mixture_sample",
     "hybrid_retrieval",
-    # 1-row scalar broadcasts (corpus size / token totals)
+    # users x dictionary-sized broadcast(event types): a genuine
+    # dimension cross, bounded by |types|
+    "negative_sampling",
+    # 1-row scalar broadcasts (corpus size / token totals / node count)
     "unigram_logprob_score",
+    "bigram_logprob_score",
+    "tfidf_term_stats",
+    "pmi_bigrams",
+    "pagerank_trade_graph",
+    "chi_square_independence",
+    "triangle_count",
+    "join_key_skew_profile",
     "psi_drift",
     "rrf_fusion",
+    "token_budget_allocation",
     "source_kl_divergence",
     # 1-row total broadcast + 4-literal-row k-probe NLJ against the vocab
     "vocab_coverage_curve",
+    # two 1-row count frames joined for the closing rate
+    "timed_funnel_conversion",
+    # 1-row seed frontier — Catalyst constant-folds the equi key
+    # (node == 0), so the graph-bounded hop joins plan as BNLJ over the
+    # localCheckpointed |nations|^2 edge frame
+    "nation_trade_bfs",
 }
 
 # build() executes eagerly (fit / stream drive / label propagation) —

@@ -87,6 +87,23 @@ def test_word_hash_matches_duckdb(spark):
         assert got[w] == dh, (w, got[w], dh)
 
 
+def test_chunking_formula_covers_every_token():
+    """document_chunking's chunk-count formula: windows of 64 tokens at
+    stride 32 cover token 1..n with no gap, and every chunk starts
+    inside the document."""
+    import math
+
+    for n in range(1, 500):
+        n_chunks = max(math.ceil((n - 32) / 32), 1)
+        starts = [i * 32 for i in range(n_chunks)]
+        assert all(s < n for s in starts)          # no empty chunks
+        covered = 0
+        for s in starts:
+            assert s <= covered                     # no gap
+            covered = max(covered, min(s + 64, n))
+        assert covered == n                         # full coverage
+
+
 def test_shingles_zip_construction_matches_reference(spark):
     """The zip-with shingle builder (r03 rewrite) must equal a plain
     Python sliding window for every n and word count, including the

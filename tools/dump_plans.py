@@ -1,7 +1,7 @@
 """Dump .explain('formatted') for named registered queries to
 plans/r16/<query>_<tag>.txt. Usage:
 
-    python tools/dump_plans.py after item_item_dimsum lsh_candidate_pairs
+    python tools/dump_plans.py after item_item_topk item_item_cosine
 """
 from __future__ import annotations
 

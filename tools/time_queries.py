@@ -2,7 +2,7 @@
 methodology (noop sink, min-of-N) at $SPARK_GRAFT_SF_DIR /
 local[$SPARK_GRAFT_CPUS]. Usage:
 
-    python tools/time_queries.py item_item_dimsum lsh_candidate_pairs
+    python tools/time_queries.py item_item_topk item_item_cosine
 """
 from __future__ import annotations
 
