@@ -35,9 +35,6 @@ HEADLINE = [
     # round-3 additions (r02 verdict #5): track the round-2 operator
     # families' cost per-round
     "prefix_jaccard_pairs",
-    "item_item_cosine",
-    "pagerank_trade_graph",
-    "tfidf_term_stats",
     # round-3 new families: winnowing fingerprints, corpus-LM scoring
     "winnowing_fingerprints",
     "unigram_logprob_score",
@@ -48,15 +45,11 @@ HEADLINE = [
     "source_kl_divergence",
     "substring_containment_pairs",
     "multimodal_ppm_decode",
-    # round-4 session-2 families: the fused DQ constraint suite,
-    # seasonal anomaly scoring
+    # round-4 session-2 family: the fused DQ constraint suite
     "dq_expectations_suite",
-    "seasonal_hourly_anomalies",
-    # round-5 families: output-bounded neighbor lists (the scale-ramp
-    # finding's production form), the oracle-checked CMF quality gate,
-    # the lake commit protocol end-to-end (CAS appends, stats+bloom
-    # pruned merge/delete, time travel on a scratch table)
-    "item_item_topk",
+    # round-5 families: the oracle-checked CMF quality gate, the lake
+    # commit protocol end-to-end (CAS appends, stats+bloom pruned
+    # merge/delete, time travel on a scratch table)
     "cmf_quality_gate",
     "lake_snapshot_lifecycle",
     # deletion vectors + change feed + incremental view maintenance
@@ -190,7 +183,7 @@ def main() -> None:
     # minimum is reported. Two distinct noise sources make a single
     # shot unrepresentative of engine cost, both measured this round:
     # (1) the first execution of a plan pays whole-stage-codegen
-    # javac/JIT compilation of its unique generated source (pagerank
+    # javac/JIT compilation of its unique generated source (a graph query
     # 12s cold vs 3.2s warm, winnowing 6.5s vs 1.1s) — a per-PLAN
     # constant a real cluster job amortizes over hours; (2) this host
     # shows intermittent multi-second hypervisor stall windows (steal%
@@ -260,8 +253,9 @@ def main() -> None:
             # and force collection so ContextCleaner releases its
             # localCheckpoint RDD blocks before the next run — otherwise
             # checkpointed blocks pile up in executor storage across the
-            # run and inflate later heavy queries (measured:
-            # item_item_cosine 16.7s late in the run vs 7.4s isolated)
+            # run and inflate later heavy queries (measured: a
+            # co-occurrence self-join 16.7s late in the run vs 7.4s
+            # isolated)
             del df
             gc.collect()
             # ContextCleaner releases persisted/localCheckpointed blocks

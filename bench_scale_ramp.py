@@ -16,9 +16,8 @@ constructed FROM it) with growth that mimics real corpus growth:
   ``n_chars`` is recomputed from the transformed text.
 - ``orders``/``lineitem`` x10: order and customer keys shift per
   replica (the transaction log and user base grow 10x), the part
-  universe stays fixed (item catalogs grow far slower than traffic) —
-  so item_item_cosine sees 10x baskets over the same items, the
-  realistic hard case for co-occurrence.
+  universe stays fixed (item catalogs grow far slower than traffic),
+  so per-part data grows 10x over the same catalog.
 
 Timing mirrors bench.py: noop sink (full plan, nothing collected), two
 interleaved passes, min per query, PSI/load bracketing. Output:
@@ -52,20 +51,14 @@ HEAVY = [
     "prefix_jaccard_pairs",
     "winnowing_fingerprints",
     "substring_containment_pairs",
-    "item_item_cosine",
-    # r05: the output-bounded neighbor-list form — at 10x traffic its
-    # row count must stay ~catalog x k while the absolute-support form
-    # floods (the finding recorded in `findings`)
-    "item_item_topk",
     # r05 second wave — the families the r04 verdict did not name but a
     # reviewer would probe next: the CMF fit itself (events x10 -> more
     # users, same month), bounded-query brute-force ANN (corpus x10,
-    # fixed 20-query batch), exact dedup and TF-IDF (documents x10),
+    # fixed 20-query batch), exact dedup (documents x10),
     # sessionization (10x event density through the session window)
     "cmf_fit_predict",
     "ann_topk_cosine",
     "exact_dedup",
-    "tfidf_term_stats",
     "sessionization",
 ]
 

@@ -42,8 +42,8 @@ Execution:
     on the driver and in every executor's broadcast. The id collect
     that feeds the guard is itself limited to ``MAX_FACTOR_IDS + 1``
     ids per entity.
-  - With a checkpoint dir configured, every ``checkpoint_interval``-th
-    update writes the entity's factor table as a reliable checkpoint.
+  - ``checkpoint_interval`` reaches only the MLlib delegate. The native
+    loop's state is the driver arrays, so it has no lineage to truncate.
 
 The model keeps a factor cache, one (ids, F) pair per entity: the fit
 fills it; for models built from DataFrames or by ``load`` it is
@@ -496,23 +496,6 @@ class CollectiveALS:
         rank, reg, alpha = self.rank, self.reg_param, self.alpha
         implicit, nonneg = self.implicit_prefs, self.nonnegative
 
-        # Reliable checkpointing: the reference's settable
-        # checkpointInterval is dead code on its own loop (quirk Q2,
-        # CollectiveALS.scala:421-422; the intended interval design is
-        # commented out at :446-468). Here, when a checkpoint dir is
-        # configured, every checkpoint_interval-th (iter x entity) update
-        # writes the entity's factor table as a reliable checkpoint. The
-        # loop's own state is the driver arrays, so there is no lineage
-        # to truncate between updates.
-        reliable_every = (
-            int(self.checkpoint_interval)
-            if sc.getCheckpointDir() is not None
-            and self.checkpoint_interval
-            and int(self.checkpoint_interval) > 0
-            else 0
-        )
-        update_step = 0
-
         for _ in range(self.max_iter):
             for e in range(n_ent):
                 srcs = tuple(src_of[e])
@@ -559,9 +542,6 @@ class CollectiveALS:
                 out = inblocks[e].mapInPandas(update, _FACTOR_SCHEMA).toPandas()
                 b.destroy()
                 state[e] = _sorted_arrays(out, rank)
-                update_step += 1
-                if reliable_every and update_step % reliable_every == 0:
-                    _factor_frame(spark, *state[e]).checkpoint(eager=True)
 
         for blk in inblocks:
             blk.unpersist()

@@ -7,14 +7,11 @@ for every user" WITHOUT materializing the full cross product.
 
 Spark-first design (same shape as ``ALSModel.recommendForAllUsers``):
 broadcast the right-hand factor matrix (rank × n_items floats — at
-rank 100 × 10M items ≈ 4 GB, beyond that switch to the ANN path) and
-compute, per Arrow batch of left factors, ``scores = L @ R.T`` +
-``argpartition`` top-k in numpy. No shuffle at all: the only stage is
-a mapInPandas over the left factor table. For item sets too large to
-broadcast, ``method="ivf"`` reuses operators/similarity.py's IVF index
-over the item factors (dot-product ANN via cosine on norm-preserved
-vectors is exact enough for ranking when factors are unnormalized —
-use brute force per probed cell).
+rank 100 × 10M items ≈ 4 GB) and compute, per Arrow batch of left
+factors, ``scores = L @ R.T`` + ``argpartition`` top-k in numpy. No
+shuffle at all: the only stage is a mapInPandas over the left factor
+table. Item sets above ``max_broadcast_items`` raise ``ValueError``;
+this module has no ANN fallback.
 """
 
 from __future__ import annotations

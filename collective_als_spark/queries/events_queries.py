@@ -298,169 +298,6 @@ def streaming_upsert_totals_query(spark: SparkSession, sf_dir: str) -> DataFrame
     return streaming_upsert_parquet(spark, sf_dir)
 
 
-@register(
-    "scd2_intervals",
-    oracle="""
-    SELECT user_id, event_type,
-           epoch_ms(ts) AS valid_from_ms,
-           epoch_ms(lead(ts) OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id
-           )) AS valid_to_ms,
-           round(value, 2) AS value,
-           lead(ts) OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id
-           ) IS NULL AS is_current
-    FROM events
-    """,
-)
-def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type 2: each observation's value is
-    valid [its ts, next observation's ts); the newest row per key is
-    open-ended (is_current). One key-partitioned lead window — the
-    standard history-table build, fully parallel across keys."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    return ev.select(
-        "user_id",
-        "event_type",
-        (F.unix_micros("ts") / 1000).cast("bigint").alias("valid_from_ms"),
-        (F.unix_micros(nxt) / 1000).cast("bigint").alias("valid_to_ms"),
-        F.round("value", 2).alias("value"),
-        nxt.isNull().alias("is_current"),
-    )
-
-
-@register(
-    "hourly_resample_gapfill",
-    oracle="""
-    WITH b AS (
-        SELECT user_id, time_bucket(INTERVAL 1 HOUR, ts) AS h,
-               round(sum(value), 2) AS v
-        FROM events WHERE user_id < 20
-        GROUP BY 1, 2
-    ),
-    spans AS (
-        SELECT user_id, min(h) AS h0, max(h) AS h1 FROM b GROUP BY user_id
-    ),
-    grid AS (
-        SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        FROM spans
-    ),
-    joined AS (
-        SELECT g.user_id, g.h, b.v,
-               count(b.v) OVER (
-                   PARTITION BY g.user_id ORDER BY g.h
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS grp
-        FROM grid g LEFT JOIN b ON b.user_id = g.user_id AND b.h = g.h
-    )
-    SELECT user_id, epoch_ms(h) AS hour_ms,
-           first_value(v) OVER (
-               PARTITION BY user_id, grp ORDER BY h
-           ) AS v_filled,
-           v IS NOT NULL AS observed
-    FROM joined
-    """,
-)
-def hourly_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resample + gap fill: hourly totals per user on a
-    dense hour grid from the user's first to last event, missing hours
-    forward-filled from the latest observed value (count-over-window
-    grouping trick: nulls join the preceding observation's group).
-
-    Scale shape: the grid explodes sequence(min, max) PER USER — output
-    is bounded by users x their own span, and every window is
-    user-partitioned. The standard densification for training
-    time-series models on event data."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    b = (
-        ev.groupBy(
-            "user_id", F.date_trunc("hour", F.col("ts")).alias("h")
-        )
-        .agg(F.round(F.sum("value"), 2).alias("v"))
-    )
-    spans = b.groupBy("user_id").agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    )
-    grid = spans.select(
-        "user_id",
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
-    )
-    joined = grid.join(b, ["user_id", "h"], "left")
-    w_cum = (
-        Window.partitionBy("user_id")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    joined = joined.withColumn("grp", F.count("v").over(w_cum))
-    w_grp = Window.partitionBy("user_id", "grp").orderBy("h")
-    return joined.select(
-        "user_id",
-        (F.unix_micros("h") / 1000).cast("bigint").alias("hour_ms"),
-        F.first("v").over(w_grp).alias("v_filled"),
-        F.col("v").isNotNull().alias("observed"),
-    )
-
-
-@register(
-    "conversion_funnel",
-    oracle="""
-    WITH stages AS (
-        SELECT user_id,
-               min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-               min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-               min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-        FROM events
-        GROUP BY user_id
-    )
-    SELECT CAST(CASE
-             WHEN t_view IS NULL THEN 0
-             WHEN t_click IS NULL OR t_click <= t_view THEN 1
-             WHEN t_purchase IS NULL OR t_purchase <= t_click THEN 2
-             ELSE 3
-           END AS INTEGER) AS funnel_stage,
-           count(*) AS n_users
-    FROM stages
-    GROUP BY 1
-    """,
-)
-def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel view -> click -> purchase: a user
-    reaches stage k only if each step's FIRST occurrence strictly
-    follows the previous step's. One conditional aggregate per user
-    (no joins, no window), then a tiny stage rollup — two
-    map-side-combinable shuffles for the whole funnel."""
-    ev = load_table(spark, sf_dir, "events")
-    stages = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "t_purchase"
-        ),
-    )
-    stage = (
-        F.when(F.col("t_view").isNull(), 0)
-        .when(F.col("t_click").isNull() | (F.col("t_click") <= F.col("t_view")), 1)
-        .when(
-            F.col("t_purchase").isNull() | (F.col("t_purchase") <= F.col("t_click")),
-            2,
-        )
-        .otherwise(3)
-    )
-    return (
-        stages.select(stage.cast("int").alias("funnel_stage"))
-        .groupBy("funnel_stage")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
 @register("streaming_ewma")
 def streaming_ewma_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user EWMA (stateful twin of ewma_user_value);
@@ -621,73 +458,3 @@ def streaming_multimodal_ingest_query(spark: SparkSession, sf_dir: str) -> DataF
     from collective_als_spark.streaming.stateful import streaming_multimodal_ingest
 
     return streaming_multimodal_ingest(spark, sf_dir)
-
-
-@register(
-    "seasonal_hourly_anomalies",
-    oracle="""
-    WITH hourly AS (
-        SELECT date_trunc('hour', ts) AS h, CAST(count(*) AS BIGINT) AS n_events
-        FROM events GROUP BY 1
-    ), stats AS (
-        SELECT CAST(hour(h) AS INTEGER) AS hod,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(sum(n_events) AS BIGINT) AS s1,
-               CAST(sum(n_events * n_events) AS BIGINT) AS s2
-        FROM hourly GROUP BY 1
-    )
-    SELECT h, CAST(hour(h) AS INTEGER) AS hod, n_events,
-           CASE WHEN cnt >= 2 AND s2 - CAST(s1 AS DOUBLE) * s1 / cnt > 0
-                THEN round((n_events - CAST(s1 AS DOUBLE) / cnt)
-                     / sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / cnt) / (cnt - 1)), 4)
-           END AS z_score,
-           COALESCE(CASE WHEN cnt >= 2 AND s2 - CAST(s1 AS DOUBLE) * s1 / cnt > 0
-                THEN abs((n_events - CAST(s1 AS DOUBLE) / cnt)
-                     / sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / cnt) / (cnt - 1))) > 2
-           END, FALSE) AS is_anomaly
-    FROM hourly JOIN stats ON CAST(hour(h) AS INTEGER) = stats.hod
-    """,
-)
-def seasonal_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal decomposition + anomaly flags for event volume: the
-    hour-of-day profile is the seasonal component (30 observations per
-    hod over the month), each hourly bucket is z-scored against its
-    own hod's distribution, |z| > 2 flags anomalies — the standard
-    seasonal-baseline monitor for ingest pipelines.
-
-    Scale shape: one shuffle to hourly buckets (720 rows per month
-    regardless of event volume — the reduction happens in the
-    partial agg), a 24-row stats frame broadcast back. Cross-engine
-    determinism: mean/variance are computed FROM INTEGER SUMS with the
-    same closed-form expression on both sides ((s2 - s1^2/cnt)/(cnt-1))
-    — builtin stddev implementations (Welford vs two-pass) differ in
-    the last ulp and would flip round(.,4) boundaries."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events")
-    )
-    stats = hourly.groupBy(F.hour("h").cast("int").alias("hod")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("n_events").cast("bigint").alias("s1"),
-        F.sum(F.col("n_events") * F.col("n_events")).cast("bigint").alias("s2"),
-    )
-    mean = F.col("s1").cast("double") / F.col("cnt")
-    ssq = F.col("s2") - F.col("s1").cast("double") * F.col("s1") / F.col("cnt")
-    std = F.sqrt(ssq / (F.col("cnt") - 1))
-    # z is undefined for a single observation (cnt-1 = 0) or a
-    # zero-variance profile: Spark's x/0 yields NULL while DuckDB's
-    # IEEE floats yield inf/nan, so BOTH engines must emit NULL z /
-    # false anomaly explicitly for the oracle to agree
-    defined = (F.col("cnt") >= 2) & (ssq > 0)
-    z = F.when(defined, (F.col("n_events") - mean) / std)
-    return (
-        hourly.withColumn("hod", F.hour("h").cast("int"))
-        .join(F.broadcast(stats), "hod")
-        .select(
-            "h",
-            "hod",
-            "n_events",
-            F.round(z, 4).alias("z_score"),
-            F.coalesce(F.abs(z) > 2, F.lit(False)).alias("is_anomaly"),
-        )
-    )

@@ -1,6 +1,5 @@
-"""Extended operator coverage: as-of join, set ops, cube, exact
-percentiles, distinct counting, factor Gramian, SQL passthrough
-(SURVEY §2.7/§2.11 free-in-Spark surface + A6)."""
+"""Extended operator coverage: as-of join, factor Gramian, SQL
+passthrough (SURVEY §2.7/§2.11 free-in-Spark surface + A6)."""
 
 from __future__ import annotations
 
@@ -50,105 +49,6 @@ def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("ts_ms"),
         "asof_click_event_id",
         (F.unix_millis("ts") - F.unix_millis("asof_ts")).alias("ms_since_click"),
-    )
-
-
-@register(
-    "intersect_except",
-    oracle="""
-    SELECT id, 'both' AS tag FROM (
-        SELECT DISTINCT user_id AS id FROM events
-        INTERSECT
-        SELECT DISTINCT c_custkey AS id FROM customer
-    )
-    UNION ALL
-    SELECT id, 'customer_only' AS tag FROM (
-        SELECT DISTINCT c_custkey AS id FROM customer
-        EXCEPT
-        SELECT DISTINCT user_id AS id FROM events
-    )
-    """,
-)
-def intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT set operators (SURVEY §2.7 — absent in
-    reference, free in Spark)."""
-    ev_ids = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").alias("id")
-    ).distinct()
-    c_ids = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id")
-    ).distinct()
-    both = ev_ids.intersect(c_ids).select("id", F.lit("both").alias("tag"))
-    only = c_ids.exceptAll(ev_ids).select("id", F.lit("customer_only").alias("tag"))
-    return both.union(only)
-
-
-@register(
-    "cube_agg",
-    oracle="""
-    SELECT o_orderpriority, o_orderstatus,
-           count(*) AS n, round(sum(o_totalprice), 2) AS total
-    FROM orders
-    GROUP BY CUBE (o_orderpriority, o_orderstatus)
-    """,
-)
-def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets (SURVEY §2.4 — free in Spark)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.cube("o_orderpriority", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total")
-    )
-
-
-@register(
-    "exact_percentiles",
-    oracle="""
-    SELECT l_returnflag,
-           round(percentile_cont(0.25) WITHIN GROUP (ORDER BY l_extendedprice), 4) AS p25,
-           round(percentile_cont(0.5)  WITHIN GROUP (ORDER BY l_extendedprice), 4) AS p50,
-           round(percentile_cont(0.75) WITHIN GROUP (ORDER BY l_extendedprice), 4) AS p75
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-)
-def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (Spark ``percentile`` ==
-    ANSI percentile_cont)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile("l_extendedprice", F.lit(0.25)), 4).alias("p25"),
-        F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("l_extendedprice", F.lit(0.75)), 4).alias("p75"),
-    )
-
-
-@register(
-    "distinct_count_stats",
-    oracle="""
-    SELECT l_returnflag,
-           count(DISTINCT l_partkey) AS n_parts,
-           count(DISTINCT l_suppkey) AS n_supps
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-)
-def distinct_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct counting (expand + two-phase agg)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-    )
-
-
-@register("approx_distinct_quantile")
-def approx_distinct_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HLL++) + percentile_approx sketches —
-    rows-only: sketch internals differ across engines by design."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-        F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_median"),
     )
 
 

@@ -1,1070 +1,24 @@
-"""Round-2 extension set 3: corpus statistics, collaborative-filtering
-similarity, sequence transitions, masking, and iterative graph rank.
+"""Extension set 3: distribution drift, hybrid-retrieval rank fusion,
+and sampled item-item similarity.
 
 Reference parity: these extend the LLM-data-pipeline surface beyond the
-reference's operator set (SURVEY §2.11 north-star list) — TF-IDF / PMI
-are the classical collocation statistics next to the BM25 scorer in
-``llm_data.py``; item-item cosine is the neighborhood-model companion
-to the CMF factor model (reference CollectiveALS.scala trains the
-factor side); the unrolled PageRank demonstrates the iterative-join
-pattern the reference's ALS loop uses (`als.py::_fit_native`), applied
-to a graph.
+reference's operator set (SURVEY §2.11 north-star list). PSI is the
+ML-monitoring drift score; RRF fuses the BM25 scorer in ``llm_data.py``
+with embedding cosine; DIMSUM is the sampled neighborhood-model
+companion to the CMF factor model.
 
 Scale notes are per-operator; every plan here is shuffle-bounded
-(no cartesian products except documented 1-row scalar broadcasts) and
-window operations are always key-partitioned.
+(no cartesian products except documented 1-row scalar broadcasts).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from collective_als_spark.functions import text as TX
 from collective_als_spark.registry import register
 from collective_als_spark.sources.testdata import load_table
-
-
-@register(
-    "tfidf_term_stats",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents
-    ),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    s AS (
-        SELECT word,
-               count(DISTINCT doc_id) AS df,
-               count(*) AS tf_total
-        FROM w GROUP BY word
-    )
-    SELECT word, df, tf_total,
-           round(ln((n.n_docs + 1.0) / (df + 1.0)) + 1.0, 6) AS idf
-    FROM s, n
-    WHERE df >= 10
-    """,
-)
-def tfidf_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smoothed-IDF term statistics (sklearn-style ``ln((N+1)/(df+1))+1``)
-    — the global weights of a TF-IDF vectorizer, next to the BM25 scorer.
-
-    Scale: one explode + one map-side-combinable groupBy(word) shuffle
-    (vocabulary-sized output); the corpus size N is a 1-row aggregate
-    broadcast to the vocab frame (BroadcastNestedLoopJoin over one row,
-    not a data cross join). df >= 10 prunes the hapax tail early.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    stats = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word")
-        .agg(
-            F.count_distinct("doc_id").alias("df"),
-            F.count(F.lit(1)).alias("tf_total"),
-        )
-        .filter(F.col("df") >= 10)
-    )
-    idf = F.round(
-        F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0)))
-        + F.lit(1.0),
-        6,
-    )
-    return stats.crossJoin(F.broadcast(n)).select(
-        "word", "df", "tf_total", idf.alias("idf")
-    )
-
-
-@register(
-    "pmi_bigrams",
-    oracle="""
-    WITH t AS (SELECT string_split(text, ' ') AS ws FROM documents),
-    uni AS (
-        SELECT unnest(ws) AS word FROM t
-    ),
-    ucnt AS (SELECT word, count(*) AS n_u FROM uni GROUP BY word),
-    bg AS (
-        SELECT unnest(list_transform(range(1, len(ws)),
-                      i -> ws[i] || ' ' || ws[i+1])) AS bigram
-        FROM t
-    ),
-    bcnt AS (
-        SELECT bigram, count(*) AS n_xy FROM bg GROUP BY bigram
-        HAVING count(*) >= 25
-    ),
-    tot AS (
-        SELECT (SELECT CAST(sum(n_u) AS BIGINT) FROM ucnt) AS total_w,
-               (SELECT count(*) AS total_bg FROM bg) AS total_bg
-    )
-    SELECT b.bigram, b.n_xy,
-           round(ln(b.n_xy) - ln(tot.total_bg)
-                 - ln(x.n_u) - ln(y.n_u) + 2.0 * ln(tot.total_w), 6)
-               AS pmi
-    FROM bcnt b
-    JOIN ucnt x ON x.word = string_split(b.bigram, ' ')[1]
-    JOIN ucnt y ON y.word = string_split(b.bigram, ' ')[2]
-    CROSS JOIN tot
-    """,
-)
-def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pointwise mutual information of adjacent word pairs — the
-    collocation score used to mine multi-word expressions for tokenizer
-    or phrase vocabularies. ``pmi = ln p(xy) - ln p(x) - ln p(y)``
-    computed in log space (no BIGINT overflow at corpus scale).
-
-    Scale: two counting shuffles (unigram + bigram, both map-side
-    combinable), then a vocabulary-sized join of the surviving bigrams
-    (support >= 25) against unigram counts — the support filter runs
-    BEFORE the join, so the joined frame is collocation-sized, not
-    corpus-sized. Totals are 1-row broadcasts.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    ws = F.split("text", " ")
-    toks = docs.select(ws.alias("ws"))
-    uni = toks.select(F.explode("ws").alias("word"))
-    ucnt = uni.groupBy("word").agg(F.count(F.lit(1)).alias("n_u"))
-    idx = F.sequence(F.lit(1), F.greatest(F.size("ws") - 1, F.lit(0)))
-    bigrams = F.when(
-        F.size("ws") >= 2,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice("ws", i, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    bg = toks.select(F.explode(bigrams).alias("bigram"))
-    bcnt = (
-        bg.groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-        .filter(F.col("n_xy") >= 25)
-    )
-    tot = uni.agg(F.count(F.lit(1)).alias("total_w")).crossJoin(
-        F.broadcast(bg.agg(F.count(F.lit(1)).alias("total_bg")))
-    )
-    parts = F.split("bigram", " ")
-    b = bcnt.withColumn("w1", parts.getItem(0)).withColumn(
-        "w2", parts.getItem(1)
-    )
-    x = ucnt.select(F.col("word").alias("w1"), F.col("n_u").alias("n_x"))
-    y = ucnt.select(F.col("word").alias("w2"), F.col("n_u").alias("n_y"))
-    pmi = F.round(
-        F.log("n_xy")
-        - F.log("total_bg")
-        - F.log("n_x")
-        - F.log("n_y")
-        + F.lit(2.0) * F.log("total_w"),
-        6,
-    )
-    return (
-        b.join(x, "w1")
-        .join(y, "w2")
-        .crossJoin(F.broadcast(tot))
-        .select("bigram", "n_xy", pmi.alias("pmi"))
-    )
-
-
-@register(
-    "item_item_cosine",
-    oracle="""
-    WITH ui AS (
-        SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS i
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    ),
-    deg AS (SELECT u, count(*) AS n_items FROM ui GROUP BY u),
-    ui2 AS (
-        SELECT ui.u, ui.i FROM ui JOIN deg ON deg.u = ui.u
-        WHERE deg.n_items <= 200
-    ),
-    icnt AS (SELECT i, count(*) AS n_i FROM ui2 GROUP BY i),
-    pairs AS (
-        SELECT a.i AS part_i, b.i AS part_j, count(*) AS n_ij
-        FROM ui2 a JOIN ui2 b ON a.u = b.u AND a.i < b.i
-        GROUP BY a.i, b.i
-        HAVING count(*) >= 3
-    )
-    SELECT p.part_i, p.part_j, p.n_ij,
-           round(p.n_ij / sqrt(ci.n_i * cj.n_i), 6) AS cosine
-    FROM pairs p
-    JOIN icnt ci ON ci.i = p.part_i
-    JOIN icnt cj ON cj.i = p.part_j
-    """,
-)
-def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item cosine similarity over the binary customer-part
-    interaction matrix — the neighborhood-model companion to the CMF
-    factor model (same interaction data `cmf/als.py` trains on).
-
-    Scale: the classic co-occurrence self-join keyed on user. Three
-    defenses make it survive 100 TB: (a) heavy users are capped
-    (n_items <= 200) BEFORE pairing, which bounds per-user fan-out at
-    C(200,2) and removes the quadratic power-law tail — the standard
-    production mitigation (DIMSUM-style sampling is noted as the next
-    step); (b) per-user and per-item degrees come from key-partitioned
-    windows (no degree-table self-joins), and the capped interaction
-    frame is materialized ONCE via localCheckpoint before the pair
-    self-join — without it the scan→join→distinct subtree executes
-    once per reference (the r02 plan audit measured 8×); `_fit_native`
-    persists its per-entity frames for the same reason; (c) the
-    support floor (n_ij >= 3) is applied inside the pair aggregate.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # ONE u-keyed exchange feeds dedup AND the degree window: hash
-    # partitioning on u satisfies the (u, i) clustering the dedup
-    # aggregate needs (subset rule), so dropDuplicates and the window
-    # both reuse the repartition instead of shuffling once each
-    # (distinct shuffled on (u, i), the window re-shuffled on u —
-    # measured 2.15s -> 1.57s for the checkpointed build at sf0.1)
-    ui = (
-        orders.join(li, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .repartition("u")
-        .dropDuplicates(["u", "i"])
-    )
-    wu = Window.partitionBy("u")
-    ui2 = (
-        ui.withColumn("n_items", F.count(F.lit(1)).over(wu))
-        .filter(F.col("n_items") <= 200)
-        .select("u", "i")
-        .localCheckpoint(eager=True)
-    )
-    # item degrees as an item-count-sized frame joined AFTER the pair
-    # aggregate: the C(n_items,2)-per-user pair shuffle is the dominant
-    # cost, so its rows carry only (part_i, part_j) — degree columns
-    # ride the small post-agg frame instead of every pair row (r03:
-    # replaced the per-row n_i window + wide shuffle; ~25% less shuffle
-    # bytes through the quadratic stage). Materialized once: the two
-    # broadcast joins rename the key differently, which defeats
-    # exchange reuse — without this each broadcast re-ran the
-    # ui2-scan + degree aggregate (visible as two identical
-    # HashAggregate+Exchange subtrees in the final plan)
-    deg = ui2.groupBy("i").agg(F.count(F.lit(1)).alias("n_i")).localCheckpoint(
-        eager=True
-    )
-    # pair-join parallelism pinned to the core count: the join was
-    # reshuffling the checkpointed frame on u anyway (checkpoint
-    # partitioning is opaque to the planner), but AQE coalesced the
-    # post-shuffle side to its 1 MB minPartitionSize — 4-5 partitions
-    # for a ~4 MB shuffle — blind to the C(n_items,2) fan-out INSIDE
-    # the join stage (13.1M generated pairs at sf0.1 chewed by 5 tasks
-    # on a 32-core host). REPARTITION_BY_NUM is the same single
-    # exchange (both branches reuse it), never AQE-coalesced, so the
-    # quadratic stage runs at full parallelism on any core count.
-    # BOUNDED at 1x defaultParallelism (r15 verdict #2): one wave of
-    # pair-exploding partial aggregates per core — 2x measured no
-    # faster at 32 cores (3.47 vs 3.18 s) and doubles the concurrent
-    # agg-map footprint in local mode's one shared heap.
-    uir = ui2.repartition(spark.sparkContext.defaultParallelism, "u")
-    a = uir.select("u", F.col("i").alias("part_i"))
-    b = uir.select("u", F.col("i").alias("part_j"))
-    pairs = (
-        a.join(b, "u")
-        .filter(F.col("part_i") < F.col("part_j"))
-        .groupBy("part_i", "part_j")
-        .agg(F.count(F.lit(1)).alias("n_ij"))
-        .filter(F.col("n_ij") >= 3)
-        .join(
-            F.broadcast(deg.select(F.col("i").alias("part_i"), F.col("n_i").alias("ni"))),
-            "part_i",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("i").alias("part_j"), F.col("n_i").alias("nj"))),
-            "part_j",
-        )
-    )
-    cosine = F.round(
-        F.col("n_ij") / F.sqrt(F.col("ni") * F.col("nj")), 6
-    )
-    return pairs.select("part_i", "part_j", "n_ij", cosine.alias("cosine"))
-
-
-@register(
-    "item_item_topk",
-    oracle="""
-    WITH ui AS (
-        SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS i
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    ),
-    deg AS (SELECT u, count(*) AS n_items FROM ui GROUP BY u),
-    ui2 AS (
-        SELECT ui.u, ui.i FROM ui JOIN deg ON deg.u = ui.u
-        WHERE deg.n_items <= 200
-    ),
-    icnt AS (SELECT i, count(*) AS n_i FROM ui2 GROUP BY i),
-    pairs AS (
-        SELECT a.i AS part_i, b.i AS part_j, count(*) AS n_ij
-        FROM ui2 a JOIN ui2 b ON a.u = b.u AND a.i < b.i
-        GROUP BY a.i, b.i
-        HAVING count(*) >= 3
-    ),
-    sym AS (
-        SELECT part_i AS item, part_j AS neighbor, n_ij FROM pairs
-        UNION ALL
-        SELECT part_j AS item, part_i AS neighbor, n_ij FROM pairs
-    ),
-    scored AS (
-        SELECT s.item, s.neighbor, s.n_ij,
-               round(s.n_ij / sqrt(ci.n_i * cj.n_i), 6) AS cosine
-        FROM sym s
-        JOIN icnt ci ON ci.i = s.item
-        JOIN icnt cj ON cj.i = s.neighbor
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY item ORDER BY cosine DESC, neighbor
-        ) AS rk
-        FROM scored
-    )
-    SELECT item, neighbor, n_ij, cosine, CAST(rk AS INTEGER) AS rk
-    FROM ranked WHERE rk <= 5
-    """,
-)
-def item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k item-item neighbors: the OUTPUT-BOUNDED form of
-    `item_item_cosine`, added after the r05 scale ramp measured the
-    absolute-support form's result density super-linear (8,976 ->
-    12.7M pairs at 10x traffic over a fixed catalog; SCALE_RAMP.json).
-    A neighbor list is what co-occurrence similarity is FOR in
-    production, and its size is n_items x k — INDEPENDENT of traffic
-    density, so the operator's output (and every downstream consumer)
-    scales with the catalog, not the interaction volume.
-
-    Plan shape: identical pair generation (heavy-user cap, support
-    floor, degrees joined post-agg on the pair-count-sized frame),
-    then pairs symmetrized (each undirected pair serves both items'
-    lists) and a per-item rank window — key-partitioned on item, never
-    global. The rank runs on the PAIR frame (already support-filtered),
-    not the interaction frame.
-
-    The support floor is TRAFFIC-SCALED (r05 verdict #6): the 2x2
-    ramp experiment (SCALE_RAMP.json) showed an ABSOLUTE floor is the
-    super-linear term — at 10x traffic over a fixed catalog every
-    pair's expected co-count grows 10x, so a fixed `n_ij >= 3` admits
-    ~1400x the pairs. Scaling the floor with interaction volume
-    (floor = max(3, interactions x 5e-6); 3 at the sf0.1 reference
-    density, 30 at 10x) keeps the admitted pair set — and the wall
-    time — traffic-invariant, measured identical at 10x (~1.0x).
-    At sf<=0.1 the max() pins the floor at 3, so the DuckDB oracle
-    (fixed >=3) stays exact."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # single u-keyed exchange shared by dedup + degree window (see
-    # item_item_cosine — same measured win, same subset-clustering rule)
-    ui = (
-        orders.join(li, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .repartition("u")
-        .dropDuplicates(["u", "i"])
-    )
-    wu = Window.partitionBy("u")
-    ui2 = (
-        ui.withColumn("n_items", F.count(F.lit(1)).over(wu))
-        .filter(F.col("n_items") <= 200)
-        .select("u", "i")
-        .localCheckpoint(eager=True)
-    )
-    # count is metadata-cheap on the checkpointed frame; 5e-6 floors/
-    # interaction calibrates floor=3 at the sf0.1 reference density
-    support_floor = max(3, int(round(ui2.count() * 5e-6)))
-    # materialized once — the item/neighbor broadcast joins rename the
-    # key differently, defeating exchange reuse (see item_item_cosine)
-    deg = ui2.groupBy("i").agg(F.count(F.lit(1)).alias("n_i")).localCheckpoint(
-        eager=True
-    )
-    # pair-join parallelism pinned against AQE's 1 MB-minPartitionSize
-    # coalesce — same single exchange, full core count through the
-    # quadratic pair stage (see item_item_cosine)
-    uir = ui2.repartition(spark.sparkContext.defaultParallelism, "u")
-    a = uir.select("u", F.col("i").alias("part_i"))
-    b = uir.select("u", F.col("i").alias("part_j"))
-    # materialize the pair aggregate ONCE: Spark does not CSE across
-    # union branches, so without this the symmetrize union re-executes
-    # the whole SMJ + pair-aggregate subtree per branch (measured in
-    # the r05 plan: two identical 17-operator subtrees, 2x the cost).
-    # The pair frame is support-filtered and tiny relative to the
-    # interaction data, so the checkpoint is cheap.
-    pairs = (
-        a.join(b, "u")
-        .filter(F.col("part_i") < F.col("part_j"))
-        .groupBy("part_i", "part_j")
-        .agg(F.count(F.lit(1)).alias("n_ij"))
-        .filter(F.col("n_ij") >= support_floor)
-        .localCheckpoint(eager=True)
-    )
-    sym = pairs.select(
-        F.col("part_i").alias("item"), F.col("part_j").alias("neighbor"), "n_ij"
-    ).unionByName(
-        pairs.select(
-            F.col("part_j").alias("item"), F.col("part_i").alias("neighbor"), "n_ij"
-        )
-    )
-    scored = (
-        sym.join(
-            F.broadcast(deg.select(F.col("i").alias("item"), F.col("n_i").alias("ni"))),
-            "item",
-        )
-        .join(
-            F.broadcast(
-                deg.select(F.col("i").alias("neighbor"), F.col("n_i").alias("nj"))
-            ),
-            "neighbor",
-        )
-        .select(
-            "item",
-            "neighbor",
-            "n_ij",
-            F.round(F.col("n_ij") / F.sqrt(F.col("ni") * F.col("nj")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("item").orderBy(F.col("cosine").desc(), F.col("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("item", "neighbor", "n_ij", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-@register(
-    "event_transition_matrix",
-    oracle="""
-    WITH seq AS (
-        SELECT event_type,
-               lead(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS next_type
-        FROM events
-    )
-    SELECT event_type, next_type, count(*) AS n
-    FROM seq
-    WHERE next_type IS NOT NULL
-    GROUP BY event_type, next_type
-    """,
-)
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition counts over per-user event
-    sequences — session-model statistics for next-action prediction.
-
-    Scale: one window partitioned by user_id (ordered by ts with
-    event_id as the deterministic tie-break — never un-partitioned)
-    followed by a |types|^2-sized count aggregate with map-side combine.
-    """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        events.select(
-            "event_type", F.lead("event_type").over(w).alias("next_type")
-        )
-        .filter(F.col("next_type").isNotNull())
-        .groupBy("event_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register(
-    "numeric_mask_stats",
-    oracle="""
-    SELECT event_type,
-           count(*) AS n_events,
-           CAST(sum(CASE WHEN len(regexp_extract_all(props, '[0-9]+')) > 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_with_num,
-           CAST(sum(len(regexp_extract_all(props, '[0-9]+'))) AS BIGINT)
-               AS n_matches,
-           count(DISTINCT regexp_replace(props, '[0-9]+', '#', 'g'))
-               AS n_masked_forms
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def numeric_mask_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII-style pattern masking audit: replace every numeric run in the
-    event payload with a placeholder and report, per event type, how
-    many events carried numbers, total matches, and how many distinct
-    masked payload shapes remain. The same regexp_replace plumbing
-    handles email/SSN-class patterns on real corpora.
-
-    Scale: map-only regex work (JVM codegen `regexp_count` /
-    `regexp_replace`, no UDF) feeding one groupBy(event_type) with
-    map-side combine; the distinct-masked-forms count shuffles
-    (type, masked) pairs — bounded by payload-shape cardinality,
-    not event count.
-    """
-    events = load_table(spark, sf_dir, "events")
-    n_runs = F.regexp_count("props", F.lit(r"[0-9]+"))
-    masked = F.regexp_replace("props", r"[0-9]+", "#")
-    return events.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.when(n_runs > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_with_num"),
-        F.sum(n_runs).cast("bigint").alias("n_matches"),
-        F.count_distinct(masked).alias("n_masked_forms"),
-    )
-
-
-@register(
-    "fuzzy_name_linkage",
-    oracle="""
-    WITH n AS (
-        SELECT p_name, string_split(p_name, ' ')[2] AS noun,
-               count(*) AS cnt
-        FROM part GROUP BY p_name, string_split(p_name, ' ')[2]
-    )
-    SELECT a.p_name AS name_a, b.p_name AS name_b,
-           levenshtein(a.p_name, b.p_name) AS dist,
-           a.cnt AS n_a, b.cnt AS n_b
-    FROM n a JOIN n b ON a.noun = b.noun AND a.p_name < b.p_name
-    WHERE levenshtein(a.p_name, b.p_name) <= 3
-    """,
-)
-def fuzzy_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution / record linkage: near-identical part names
-    found by blocking + edit distance — the fuzzy-dedup step of a data
-    cleaning pipeline (same blocked-pair shape as the LSH dedup family,
-    with Levenshtein instead of Jaccard as the verifier).
-
-    Scale: linkage runs at the DISTINCT-entity level (names are
-    count-compressed first, so the pair join is vocabulary-sized, not
-    record-sized), and candidates are blocked on the head noun — pair
-    volume is sum-of-block-squares, never all-pairs. Levenshtein is a
-    JVM codegen builtin, no UDF.
-    """
-    part = load_table(spark, sf_dir, "part")
-    names = part.groupBy("p_name").agg(F.count(F.lit(1)).alias("cnt"))
-    names = names.withColumn("noun", F.split("p_name", " ").getItem(1))
-    a = names.select(
-        F.col("p_name").alias("name_a"),
-        F.col("cnt").alias("n_a"),
-        "noun",
-    )
-    b = names.select(
-        F.col("p_name").alias("name_b"),
-        F.col("cnt").alias("n_b"),
-        "noun",
-    )
-    return (
-        a.join(b, "noun")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .withColumn("dist", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("dist") <= 3)
-        .select("name_a", "name_b", "dist", "n_a", "n_b")
-    )
-
-
-@register(
-    "embedding_covariance",
-    oracle="""
-    WITH e AS (
-        SELECT vec_id,
-               generate_subscripts(embedding, 1) - 1 AS i,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-        FROM embeddings
-    ),
-    m AS (SELECT i, avg(x) AS mu FROM e GROUP BY i),
-    p AS (
-        SELECT a.i AS i, b.i AS j,
-               sum(a.x * b.x) AS sxy, count(*) AS n
-        FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.i <= b.i
-        GROUP BY a.i, b.i
-    )
-    SELECT p.i, p.j, round(p.sxy / p.n - ma.mu * mb.mu, 6) AS cov
-    FROM p
-    JOIN m ma ON ma.i = p.i
-    JOIN m mb ON mb.i = p.j
-    """,
-)
-def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centered covariance matrix (upper triangle) of the embedding
-    columns — the PCA / whitening front-end, the centered sibling of
-    the `gramian_yty` Gramian. cov(i,j) = E[x_i x_j] - E[x_i]E[x_j].
-
-    Scale: the cross-products are built per-row with nested
-    higher-order transforms (one explode, NO self-join of the exploded
-    frame — the oracle's relational self-join would shuffle a 64×
-    expansion of the data; the Spark plan instead ships d(d+1)/2
-    partial products into a map-side-combinable groupBy over at most
-    d² keys). Per-dimension means ride the diagonal-free second
-    aggregate and broadcast-join back (d rows). Same partial-sum
-    shape as `cmf/solver.py::compute_yty`'s vectorized path.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = emb.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(embedding, (x, i) -> "
-                "transform(slice(embedding, i + 1, size(embedding) - i), "
-                "(y, j) -> struct(i AS i, i + j AS j, "
-                "CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS xy))))"
-            )
-        ).alias("s")
-    ).select("s.*")
-    sums = pairs.groupBy("i", "j").agg(
-        F.sum("xy").alias("sxy"), F.count(F.lit(1)).alias("n")
-    )
-    means = (
-        emb.select(
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "i", "x"
-            )
-        )
-        .groupBy("i")
-        .agg(F.avg("x").alias("mu"))
-    )
-    ma = F.broadcast(means.select(F.col("i"), F.col("mu").alias("mu_i")))
-    mb = F.broadcast(
-        means.select(F.col("i").alias("j"), F.col("mu").alias("mu_j"))
-    )
-    return (
-        sums.join(ma, "i")
-        .join(mb, "j")
-        .select(
-            "i",
-            "j",
-            F.round(
-                F.col("sxy") / F.col("n") - F.col("mu_i") * F.col("mu_j"), 6
-            ).alias("cov"),
-        )
-    )
-
-
-@register(
-    "trend_regression",
-    oracle="""
-    SELECT event_type,
-           count(*) AS n,
-           round(regr_slope(value, epoch(ts) / 86400.0), 6) AS slope_per_day,
-           round(regr_intercept(value, epoch(ts) / 86400.0), 6) AS intercept,
-           round(corr(value, epoch(ts) / 86400.0), 6) AS r
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group OLS trend: slope/intercept/correlation of event value
-    against time — drift and trend detection over metric streams, via
-    the SQL-standard closed-form aggregates (no iterative fitting).
-
-    Scale: regr_slope/regr_intercept/corr are single-pass algebraic
-    aggregates (sums of x, y, xy, x², y²) — map-side combinable, one
-    shuffle on the group key, JVM codegen throughout.
-    """
-    events = load_table(spark, sf_dir, "events")
-    x = F.col("ts").cast("double") / F.lit(86400.0)
-    return events.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.regr_slope(F.col("value"), x), 6).alias("slope_per_day"),
-        F.round(F.regr_intercept(F.col("value"), x), 6).alias("intercept"),
-        F.round(F.corr(F.col("value"), x), 6).alias("r"),
-    )
-
-
-@register(
-    "chi_square_independence",
-    oracle="""
-    WITH obs AS (
-        SELECT lang, source, count(*) AS o
-        FROM documents GROUP BY lang, source
-    ),
-    rm AS (SELECT lang, CAST(sum(o) AS BIGINT) AS rt FROM obs GROUP BY lang),
-    cm AS (SELECT source, CAST(sum(o) AS BIGINT) AS ct FROM obs GROUP BY source),
-    n AS (SELECT CAST(sum(o) AS BIGINT) AS total FROM obs)
-    SELECT round(sum(pow(obs.o - rm.rt * cm.ct * 1.0 / n.total, 2)
-                     / (rm.rt * cm.ct * 1.0 / n.total)), 6) AS chi2,
-           CAST((count(DISTINCT obs.lang) - 1)
-                * (count(DISTINCT obs.source) - 1) AS BIGINT) AS dof
-    FROM obs
-    JOIN rm ON rm.lang = obs.lang
-    JOIN cm ON cm.source = obs.source
-    CROSS JOIN n
-    """,
-)
-def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square test of independence between document language and
-    source — the categorical-association check of a corpus audit
-    (does language mix differ by source?).
-
-    Scale: one groupBy(lang, source) count over the corpus (map-side
-    combinable), then all remaining arithmetic happens on the
-    CONTINGENCY table (|lang|×|source| rows): marginals are re-aggs of
-    that tiny frame, broadcast back; the corpus is scanned once.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    obs = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    obs = obs.localCheckpoint(eager=True)  # contingency-sized; reused 4x
-    rm = obs.groupBy("lang").agg(F.sum("o").cast("bigint").alias("rt"))
-    cm = obs.groupBy("source").agg(F.sum("o").cast("bigint").alias("ct"))
-    n = obs.agg(F.sum("o").cast("bigint").alias("total"))
-    e = F.col("rt") * F.col("ct") / F.col("total")
-    return (
-        obs.join(F.broadcast(rm), "lang")
-        .join(F.broadcast(cm), "source")
-        .crossJoin(F.broadcast(n))
-        .agg(
-            F.round(F.sum(F.pow(F.col("o") - e, 2) / e), 6).alias("chi2"),
-            (
-                (F.count_distinct("lang") - 1)
-                * (F.count_distinct("source") - 1)
-            )
-            .cast("bigint")
-            .alias("dof"),
-        )
-    )
-
-
-@register(
-    "dq_audit",
-    oracle="""
-    SELECT 'lineitem_orphans' AS check_name,
-           CAST((SELECT count(*) FROM lineitem l
-                 WHERE NOT EXISTS (SELECT 1 FROM orders o
-                                   WHERE o.o_orderkey = l.l_orderkey))
-                AS BIGINT) AS n_violations
-    UNION ALL
-    SELECT 'orders_dup_pk',
-           CAST((SELECT COALESCE(sum(c - 1), 0) FROM (
-                 SELECT count(*) AS c FROM orders GROUP BY o_orderkey
-                 HAVING count(*) > 1)) AS BIGINT)
-    UNION ALL
-    SELECT 'lineitem_nonpositive_qty',
-           CAST((SELECT count(*) FROM lineitem WHERE l_quantity <= 0)
-                AS BIGINT)
-    UNION ALL
-    SELECT 'events_null_user',
-           CAST((SELECT count(*) FROM events WHERE user_id IS NULL)
-                AS BIGINT)
-    UNION ALL
-    SELECT 'orders_bad_status',
-           CAST((SELECT count(*) FROM orders
-                 WHERE o_orderstatus NOT IN ('F', 'O', 'P')) AS BIGINT)
-    """,
-)
-def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality audit: one row per expectation (referential
-    integrity, primary-key uniqueness, domain and null checks) with its
-    violation count — the dbt-tests / Great-Expectations-style gate a
-    training pipeline runs before ingesting a new drop.
-
-    Scale: each check is an independent scan+aggregate (the orphan
-    check is a broadcast-able anti join on the order key; PK check is
-    a groupBy on the key), unioned as 1-row frames — no cross-check
-    shuffles, each check prunes to the columns it needs.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    events = load_table(spark, sf_dir, "events")
-
-    def one(name: str, df: DataFrame) -> DataFrame:
-        return df.select(
-            F.lit(name).alias("check_name"),
-            F.coalesce(F.col("v"), F.lit(0)).cast("bigint").alias(
-                "n_violations"
-            ),
-        )
-
-    orphans = li.join(
-        orders, li.l_orderkey == orders.o_orderkey, "left_anti"
-    ).agg(F.count(F.lit(1)).alias("v"))
-    dup_pk = (
-        orders.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.sum(F.col("c") - 1).alias("v"))
-    )
-    neg_qty = li.filter(F.col("l_quantity") <= 0).agg(
-        F.count(F.lit(1)).alias("v")
-    )
-    null_user = events.filter(F.col("user_id").isNull()).agg(
-        F.count(F.lit(1)).alias("v")
-    )
-    bad_status = orders.filter(
-        ~F.col("o_orderstatus").isin("F", "O", "P")
-    ).agg(F.count(F.lit(1)).alias("v"))
-    return (
-        one("lineitem_orphans", orphans)
-        .unionAll(one("orders_dup_pk", dup_pk))
-        .unionAll(one("lineitem_nonpositive_qty", neg_qty))
-        .unionAll(one("events_null_user", null_user))
-        .unionAll(one("orders_bad_status", bad_status))
-    )
-
-
-@register(
-    "triangle_count",
-    oracle="""
-    WITH op AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    ok AS (
-        SELECT l_orderkey FROM op GROUP BY l_orderkey
-        HAVING count(*) <= 50
-    ),
-    e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM op a
-        JOIN ok ON ok.l_orderkey = a.l_orderkey
-        JOIN op b ON a.l_orderkey = b.l_orderkey
-               AND a.l_partkey < b.l_partkey
-        GROUP BY a.l_partkey, b.l_partkey
-        HAVING count(*) >= 2
-    ),
-    deg AS (
-        SELECT x, CAST(count(*) AS BIGINT) AS d FROM (
-            SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e
-        ) GROUP BY x
-    ),
-    oriented AS (
-        SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END
-                   AS src,
-               CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END
-                   AS dst
-        FROM e
-        JOIN deg du ON du.x = e.u
-        JOIN deg dv ON dv.x = e.v
-    ),
-    wedge AS (
-        SELECT o1.dst AS b, o2.dst AS c
-        FROM oriented o1 JOIN oriented o2
-          ON o1.src = o2.src AND o1.dst < o2.dst
-    ),
-    tri AS (
-        SELECT count(*) AS t FROM wedge w
-        JOIN e ON e.u = least(w.b, w.c) AND e.v = greatest(w.b, w.c)
-    ),
-    wn AS (SELECT count(*) AS nw FROM wedge),
-    en AS (SELECT count(*) AS ne FROM e)
-    SELECT en.ne AS n_edges, wn.nw AS n_wedges, tri.t AS n_triangles,
-           round(CASE WHEN wn.nw > 0 THEN tri.t * 1.0 / wn.nw ELSE 0 END, 6)
-               AS closure_rate
-    FROM en, wn, tri
-    """,
-)
-def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting with degree-ordered orientation over the
-    co-purchase graph (parts appearing in the same order, support >= 2)
-    — the graph-clustering statistic behind community detection and
-    spam-graph audits.
-
-    Scale: the three standard defenses — (a) pathological baskets are
-    capped (<= 50 distinct parts per order) before the in-order pair
-    blowup; (b) edges are ORIENTED low→high by (degree, id), which
-    bounds every out-degree at O(sqrt(m)) so the wedge self-join is
-    sum-of-squares-bounded regardless of power-law hubs (the trick
-    from Suri & Vassilvitskii's MapReduce triangle counting); (c) the
-    edge list is localCheckpoint'ed once and reused by the orientation,
-    wedge, and closure stages. Closure check is an equi-join on the
-    normalized pair key.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    ok = (
-        op.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("np"))
-        .filter(F.col("np") <= 50)
-        .select("l_orderkey")
-    )
-    a = op.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = op.select("l_orderkey", F.col("l_partkey").alias("v"))
-    e = (
-        a.join(ok, "l_orderkey")
-        .join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    du = F.broadcast(deg.select(F.col("x").alias("u"), F.col("d").alias("du")))
-    dv = F.broadcast(deg.select(F.col("x").alias("v"), F.col("d").alias("dv")))
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    o1 = oriented.select("src", F.col("dst").alias("b"))
-    o2 = oriented.select("src", F.col("dst").alias("c"))
-    wedge = o1.join(o2, "src").filter(F.col("b") < F.col("c")).select("b", "c")
-    wedge = wedge.localCheckpoint(eager=True)
-    tri = (
-        wedge.withColumn("u", F.least("b", "c"))
-        .withColumn("v", F.greatest("b", "c"))
-        .join(e, ["u", "v"])
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
-    en = e.agg(F.count(F.lit(1)).alias("n_edges"))
-    wn = wedge.agg(F.count(F.lit(1)).alias("n_wedges"))
-    closure = F.round(
-        F.when(
-            F.col("n_wedges") > 0, F.col("t") / F.col("n_wedges")
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    return (
-        en.crossJoin(F.broadcast(wn))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            "n_edges",
-            "n_wedges",
-            F.col("t").alias("n_triangles"),
-            closure.alias("closure_rate"),
-        )
-    )
-
-
-@register(
-    "zscore_outliers",
-    oracle="""
-    WITH s AS (
-        SELECT event_type, value,
-               avg(value) OVER (PARTITION BY event_type) AS mu,
-               stddev_samp(value) OVER (PARTITION BY event_type) AS sigma
-        FROM events
-    )
-    SELECT event_type,
-           count(*) AS n,
-           CAST(sum(CASE WHEN abs(value - mu) > 3 * sigma
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           round(any_value(mu), 6) AS mu,
-           round(any_value(sigma), 6) AS sigma
-    FROM s GROUP BY event_type
-    """,
-)
-def zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-score anomaly detection: per event type, how many values sit
-    beyond 3 standard deviations — the first-line metric-stream outlier
-    gate.
-
-    Scale: a single scan; per-group mean/stddev ride a KEY-PARTITIONED
-    window (algebraic aggregates, no second scan and no stats join),
-    then one count aggregate. The 3-sigma comparison is codegen'd.
-    """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type")
-    s = events.select(
-        "event_type",
-        "value",
-        F.avg("value").over(w).alias("mu"),
-        F.stddev_samp("value").over(w).alias("sigma"),
-    )
-    return s.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.abs(F.col("value") - F.col("mu")) > 3 * F.col("sigma"), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_outliers"),
-        F.round(F.any_value("mu"), 6).alias("mu"),
-        F.round(F.any_value("sigma"), 6).alias("sigma"),
-    )
-
-
-@register(
-    "join_key_skew_profile",
-    oracle="""
-    WITH c AS (
-        SELECT l_partkey, count(*) AS n FROM lineitem GROUP BY l_partkey
-    ),
-    t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
-    SELECT l_partkey, n, round(n * 1.0 / t.total, 6) AS share
-    FROM c, t
-    ORDER BY n DESC, l_partkey
-    LIMIT 10
-    """,
-)
-def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostic: the 10 heaviest part keys and their
-    share of all lineitem rows — the report you run BEFORE deciding
-    whether a join needs salting (`operators/skew.py::salted_join`) or
-    AQE skew handling.
-
-    Scale: one map-side-combinable count shuffle, a 1-row total
-    broadcast, and TakeOrderedAndProject for the top-10 (never a
-    global sort).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    c = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
-    t = c.agg(F.sum("n").cast("bigint").alias("total"))
-    return (
-        c.crossJoin(F.broadcast(t))
-        .select(
-            "l_partkey",
-            "n",
-            F.round(F.col("n") / F.col("total"), 6).alias("share"),
-        )
-        .orderBy(F.desc("n"), "l_partkey")
-        .limit(10)
-    )
-
-
-@register(
-    "welch_ttest",
-    oracle="""
-    WITH s AS (
-        SELECT
-            count(*) FILTER (event_type = 'purchase') AS n1,
-            avg(value) FILTER (event_type = 'purchase') AS m1,
-            var_samp(value) FILTER (event_type = 'purchase') AS v1,
-            count(*) FILTER (event_type = 'click') AS n2,
-            avg(value) FILTER (event_type = 'click') AS m2,
-            var_samp(value) FILTER (event_type = 'click') AS v2
-        FROM events
-        WHERE event_type IN ('purchase', 'click')
-    )
-    SELECT n1, n2, round(m1, 6) AS mean_1, round(m2, 6) AS mean_2,
-           round((m1 - m2) / sqrt(v1 / n1 + v2 / n2), 6) AS t_stat,
-           round(pow(v1 / n1 + v2 / n2, 2)
-                 / (pow(v1 / n1, 2) / (n1 - 1)
-                    + pow(v2 / n2, 2) / (n2 - 1)), 6) AS df
-    FROM s
-    """,
-)
-def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's two-sample t-test between purchase and click values —
-    the A/B-experiment significance readout, computed from algebraic
-    moments (no resampling) with the Welch-Satterthwaite df.
-
-    Scale: ONE pass — both groups' count/mean/variance come from
-    conditional aggregates in a single scan (pushed-down type filter),
-    the test statistic is scalar arithmetic on the 1-row result.
-    """
-    events = load_table(spark, sf_dir, "events")
-    p = F.col("event_type") == "purchase"
-    c = F.col("event_type") == "click"
-    v = F.col("value")
-    s = events.filter(F.col("event_type").isin("purchase", "click")).agg(
-        F.count(F.when(p, 1)).alias("n1"),
-        F.avg(F.when(p, v)).alias("m1"),
-        F.var_samp(F.when(p, v)).alias("v1"),
-        F.count(F.when(c, 1)).alias("n2"),
-        F.avg(F.when(c, v)).alias("m2"),
-        F.var_samp(F.when(c, v)).alias("v2"),
-    )
-    se2 = F.col("v1") / F.col("n1") + F.col("v2") / F.col("n2")
-    df = F.pow(se2, 2) / (
-        F.pow(F.col("v1") / F.col("n1"), 2) / (F.col("n1") - 1)
-        + F.pow(F.col("v2") / F.col("n2"), 2) / (F.col("n2") - 1)
-    )
-    return s.select(
-        "n1",
-        "n2",
-        F.round("m1", 6).alias("mean_1"),
-        F.round("m2", 6).alias("mean_2"),
-        F.round((F.col("m1") - F.col("m2")) / F.sqrt(se2), 6).alias("t_stat"),
-        F.round(df, 6).alias("df"),
-    )
-
 
 _PSI_BIN_W = 50.0
 _PSI_NBINS = 10
@@ -1142,51 +96,6 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_bins", F.col("ta").alias("n_a"), F.col("tb").alias("n_b"), "psi"
         )
-    )
-
-
-@register(
-    "session_paths",
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, event_type,
-               lead(event_type, 1) OVER w AS t1,
-               lead(event_type, 2) OVER w AS t2
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT event_type || '>' || t1 || '>' || t2 AS path, count(*) AS n
-    FROM seq WHERE t2 IS NOT NULL
-    GROUP BY path
-    ORDER BY n DESC, path
-    LIMIT 20
-    """,
-)
-def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 three-step behavioral paths across user event sequences —
-    the path-mining readout behind funnel discovery (the fixed-funnel
-    twin is `conversion_funnel`).
-
-    Scale: one key-partitioned window (user_id, deterministic
-    (ts, event_id) order) produces both lookaheads in a single sort;
-    path counting is map-side combinable; top-20 is
-    TakeOrderedAndProject, never a global sort.
-    """
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.select(
-        "event_type",
-        F.lead("event_type", 1).over(w).alias("t1"),
-        F.lead("event_type", 2).over(w).alias("t2"),
-    ).filter(F.col("t2").isNotNull())
-    return (
-        seq.select(
-            F.concat_ws(">", "event_type", "t1", "t2").alias("path")
-        )
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "path")
-        .limit(20)
     )
 
 
@@ -1299,224 +208,12 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKEN_BUDGET = 100000
-
-
-@register(
-    "token_budget_allocation",
-    oracle=f"""
-    WITH d AS (
-        SELECT doc_id, source, n_chars,
-               len(string_split(text, ' ')) AS tok
-        FROM documents
-    ),
-    st AS (SELECT source, CAST(sum(tok) AS BIGINT) AS s_tok
-           FROM d GROUP BY source),
-    tot AS (SELECT sum(sqrt(s_tok)) AS z FROM st),
-    quota AS (
-        SELECT st.source,
-               {_TOKEN_BUDGET} * sqrt(st.s_tok) / tot.z AS q
-        FROM st, tot
-    ),
-    c AS (
-        SELECT d.source, d.tok, quota.q,
-               sum(d.tok) OVER (PARTITION BY d.source
-                                ORDER BY d.n_chars DESC, d.doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND CURRENT ROW) AS cum
-        FROM d JOIN quota ON quota.source = d.source
-    )
-    SELECT source,
-           count(*) AS n_docs_kept,
-           CAST(sum(tok) AS BIGINT) AS tokens_kept,
-           round(any_value(q), 6) AS quota
-    FROM c
-    WHERE cum <= q
-    GROUP BY source
-    """,
-)
-def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixing under a global token budget: each source gets a
-    quota proportional to sqrt(its token mass) (the temperature-style
-    re-weighting of `source_mixture_sample`, but deterministic and
-    budget-exact), and its best documents (longest first) are kept
-    greedily until the quota is exhausted.
-
-    Scale: one corpus scan; per-source token mass is a map-side
-    combinable groupBy; the sqrt-share denominator is a 1-row
-    broadcast; the greedy cutoff is a KEY-PARTITIONED cumulative-sum
-    window (never global). Quotas join back source-level (broadcast,
-    |sources| rows).
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", "source", "n_chars",
-        F.size(F.split("text", " ")).alias("tok"),
-    )
-    st = d.groupBy("source").agg(F.sum("tok").cast("bigint").alias("s_tok"))
-    tot = st.agg(F.sum(F.sqrt("s_tok")).alias("z"))
-    quota = st.crossJoin(F.broadcast(tot)).select(
-        "source", (_TOKEN_BUDGET * F.sqrt("s_tok") / F.col("z")).alias("q")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy(F.desc("n_chars"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = d.join(F.broadcast(quota), "source").withColumn(
-        "cum", F.sum("tok").over(w)
-    )
-    return (
-        c.filter(F.col("cum") <= F.col("q"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("tok").cast("bigint").alias("tokens_kept"),
-            F.round(F.any_value("q"), 6).alias("quota"),
-        )
-    )
-
-
-_PAGERANK_DAMPING = 0.85
-_PAGERANK_ITERS = 3
-
-
-@register(
-    "pagerank_trade_graph",
-    oracle=f"""
-    WITH edges AS (
-        SELECT cn.n_name AS src, sn.n_name AS dst,
-               count(*) AS w
-        FROM lineitem l
-        JOIN orders o ON o.o_orderkey = l.l_orderkey
-        JOIN customer c ON c.c_custkey = o.o_custkey
-        JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-        JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-        GROUP BY cn.n_name, sn.n_name
-    ),
-    outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS out_w
-             FROM edges GROUP BY src),
-    trans AS (
-        SELECT e.src, e.dst, e.w * 1.0 / o.out_w AS p
-        FROM edges e JOIN outw o ON o.src = e.src
-    ),
-    nodes AS (SELECT n_name FROM nation),
-    nn AS (SELECT count(*) AS n FROM nodes),
-    r0 AS (SELECT n_name, 1.0 / nn.n AS r FROM nodes, nn),
-    r1 AS (
-        SELECT nodes.n_name,
-               (1 - {_PAGERANK_DAMPING}) / nn.n
-               + {_PAGERANK_DAMPING} * COALESCE(m.acc, 0) AS r
-        FROM nodes CROSS JOIN nn
-        LEFT JOIN (SELECT t.dst, sum(t.p * r0.r) AS acc
-                   FROM trans t JOIN r0 ON r0.n_name = t.src
-                   GROUP BY t.dst) m ON m.dst = nodes.n_name
-    ),
-    r2 AS (
-        SELECT nodes.n_name,
-               (1 - {_PAGERANK_DAMPING}) / nn.n
-               + {_PAGERANK_DAMPING} * COALESCE(m.acc, 0) AS r
-        FROM nodes CROSS JOIN nn
-        LEFT JOIN (SELECT t.dst, sum(t.p * r1.r) AS acc
-                   FROM trans t JOIN r1 ON r1.n_name = t.src
-                   GROUP BY t.dst) m ON m.dst = nodes.n_name
-    ),
-    r3 AS (
-        SELECT nodes.n_name,
-               (1 - {_PAGERANK_DAMPING}) / nn.n
-               + {_PAGERANK_DAMPING} * COALESCE(m.acc, 0) AS r
-        FROM nodes CROSS JOIN nn
-        LEFT JOIN (SELECT t.dst, sum(t.p * r2.r) AS acc
-                   FROM trans t JOIN r2 ON r2.n_name = t.src
-                   GROUP BY t.dst) m ON m.dst = nodes.n_name
-    )
-    SELECT n_name AS nation, round(r, 6) AS pagerank FROM r3
-    """,
-)
-def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (damping 0.85, 3 unrolled iterations) over the
-    customer-nation → supplier-nation trade graph — the iterative-join
-    pattern of the reference's ALS loop (`cmf/als.py::_fit_native`)
-    applied to graph centrality.
-
-    Scale: edge construction is a star join (broadcast dims) + one
-    count shuffle, materialized ONCE via localCheckpoint so the
-    unrolled iterations reuse it instead of re-running the star join
-    per iteration (the transition frame is edge-sized, tiny next to
-    the fact table). Each iteration is then rank ⋈ edges (rank side
-    node-sized → broadcast) + a groupBy(dst) aggregate. At web scale
-    the rank frame shuffles on dst instead of broadcasting, and each
-    iteration would be localCheckpoint'ed exactly as `_fit_native`
-    does per entity update.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    cn = nation.select(
-        F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("src")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("s_nationkey"), F.col("n_name").alias("dst")
-    )
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cn), "c_nationkey")
-        .join(F.broadcast(sn), "s_nationkey")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("out_w"))
-    trans = (
-        edges.join(outw, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = nation.select("n_name")
-    nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    rank = nodes.crossJoin(F.broadcast(nn)).select(
-        "n_name", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    for _ in range(_PAGERANK_ITERS):
-        contrib = (
-            trans.join(
-                F.broadcast(rank.select(F.col("n_name").alias("src"), "r")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("r")).alias("acc"))
-        )
-        rank = (
-            nodes.crossJoin(F.broadcast(nn))
-            .join(
-                F.broadcast(contrib.select(F.col("dst").alias("n_name"), "acc")),
-                "n_name",
-                "left",
-            )
-            .select(
-                "n_name",
-                (
-                    (1 - _PAGERANK_DAMPING) / F.col("n")
-                    + _PAGERANK_DAMPING * F.coalesce("acc", F.lit(0.0))
-                ).alias("r"),
-            )
-        )
-    return rank.select(
-        F.col("n_name").alias("nation"), F.round("r", 6).alias("pagerank")
-    )
-
-
 @register("item_item_dimsum")
 def item_item_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DIMSUM sampled item-item cosine (Zadeh & Carlsson): the
-    probabilistic companion to the exact ``item_item_cosine`` join.
-    Sampling keeps each entry with probability inversely proportional
-    to its column norm, so popular-item pairs — the quadratic tail
-    that forces the heavy-user cap in the exact path — are
+    """DIMSUM sampled item-item cosine (Zadeh & Carlsson) over
+    customer x part baskets. Sampling keeps each entry with probability
+    inversely proportional to its column norm, so popular-item pairs —
+    the quadratic tail of an exact co-occurrence self-join — are
     DOWN-sampled with bounded relative error while rare pairs stay
     exact; shuffle size becomes O(n·log n / threshold) independent of
     the user count. Rows-only: the sampling is randomized (exactness

@@ -583,7 +583,7 @@ def nation_trade_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier-nation → customer-nation trade graph: hop distance from
     nation 0, depth ≤ 3 — the relational traversal a recursive CTE
     expresses, unrolled as frontier joins (the Pregel/GraphX pattern
-    as plain DataFrame ops, like `pagerank_trade_graph`).
+    as plain DataFrame ops).
 
     Scale: edge derivation is the one fact-sized stage (lineitem⨝
     orders on the order key + two broadcast dim hops), collapsed by
@@ -741,9 +741,9 @@ def hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def timed_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-constrained conversion funnel: views that led to a purchase
     by the same user within ONE HOUR — the product-analytics funnel
-    with an attribution window, stricter than the ordered-only
-    `conversion_funnel`. Each view is counted once no matter how many
-    qualifying purchases follow (left-semi semantics).
+    with an attribution window, stricter than an ordered-only funnel.
+    Each view is counted once no matter how many qualifying purchases
+    follow (left-semi semantics).
 
     Scale: one user-keyed left-semi join with a time-band residual —
     the same equi+range shape as `range_join_attribution`, so rows

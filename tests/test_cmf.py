@@ -203,10 +203,9 @@ def test_per_entity_num_blocks(spark):
 
 
 def test_checkpoint_interval_contract(spark):
-    """Documented contract: checkpoint_interval selects WHERE lineage is
-    truncated (reliable checkpoint on the interval when a checkpoint dir
-    is configured, localCheckpoint otherwise/between — quirk Q2 is the
-    no-dir default) but never changes the fitted values."""
+    """Documented contract: checkpoint_interval is passed to the MLlib
+    delegate only; the native fit's state is its driver arrays, so the
+    interval never changes the fitted values."""
     df = _synth_ratings(spark).cache()
     a = CollectiveALS("user", "item", rank=4, max_iter=3, seed=1,
                       checkpoint_interval=1, force_native=True).fit(df)
@@ -217,42 +216,6 @@ def test_checkpoint_interval_contract(spark):
     assert set(fa) == set(fb)
     for i in fa:
         np.testing.assert_allclose(fa[i], fb[i], rtol=1e-5)
-
-
-def test_native_reliable_checkpoint_on_interval(spark, tmp_path):
-    """r03 verdict #3: with a checkpoint dir configured, the native
-    trainer writes RELIABLE checkpoints every checkpoint_interval-th
-    (iter x entity) update — the fault-tolerance a 100-iteration
-    production fit needs (localCheckpoint blocks die with an executor;
-    reference quirk Q2 always localCheckpoints, its intended interval
-    design is commented out at CollectiveALS.scala:446-468)."""
-    import os
-
-    sc = spark.sparkContext
-    ckpt = str(tmp_path / "reliable_ckpt")
-    prev = sc.getCheckpointDir()
-    sc.setCheckpointDir(ckpt)
-    try:
-        df = _synth_ratings(spark).cache()
-        rng = np.random.default_rng(3)
-        side = [(i, int(rng.integers(0, 6)), 1.0) for i in range(40)]
-        side_df = spark.createDataFrame(side, "item int, genre int, rating double")
-        als = CollectiveALS(
-            "user", "item", "genre", rank=4, max_iter=2, reg_param=0.05,
-            seed=1, num_blocks=4, checkpoint_interval=2,
-        )
-        model = als.fit({("user", "item"): df, ("item", "genre"): side_df})
-        # 2 iters x 3 entities = 6 updates -> reliable checkpoints at
-        # steps 2, 4, 6: the dir must now hold checkpointed-RDD payloads
-        rdd_dirs = []
-        for root, dirs, files in os.walk(ckpt):
-            rdd_dirs += [d for d in dirs if d.startswith("rdd-")]
-        assert len(rdd_dirs) == 3, rdd_dirs
-        # and the fit is still a real model
-        assert _rmse(model, df) < 0.25
-    finally:
-        if prev is not None:
-            sc.setCheckpointDir(prev)
 
 
 def test_num_blocks_auto_scales_with_parallelism(spark):

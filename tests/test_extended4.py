@@ -215,35 +215,6 @@ def test_dimsum_query_rows(spark, sf_small):
     assert all(r.part_i < r.part_j and 0 < r.cosine_est <= 1.2 for r in rows)
 
 
-def test_compression_ratio_orders_text_classes(spark):
-    """zlib ratio must order: repetitive < prose-like < random."""
-    import random
-    import string
-
-    from pyspark.sql import functions as F
-    import zlib
-
-    rng = random.Random(9)
-    rep = "spam ham " * 200
-    prose = " ".join(
-        rng.choice(["the", "quick", "brown", "fox", "jumps", "lazily", "over"])
-        for _ in range(400)
-    )
-    noise = "".join(rng.choice(string.ascii_lowercase + " ") for _ in range(1600))
-    vals = {}
-    for name, t in [("rep", rep), ("prose", prose), ("noise", noise)]:
-        vals[name] = len(zlib.compress(t.encode(), 6)) / len(t.encode())
-    assert vals["rep"] < vals["prose"] < vals["noise"]
-
-    from collective_als_spark.registry import spark_queries
-
-    rows = spark_queries()["compression_ratio_quality"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert rows
-    assert all(0 < r.min_ratio <= r.mean_ratio <= r.max_ratio for r in rows)
-
-
 def test_pq_topk_never_returns_self_pair(spark, sf_small):
     """Regression: when an Arrow batch has <= rerank_depth rows (e.g. a
     partition tail), the ADC argpartition used to pull the query's own

@@ -37,18 +37,10 @@ CROSS_JOIN_ALLOWED = {
     # users x dictionary-sized broadcast(event types): a genuine
     # dimension cross, bounded by |types|
     "negative_sampling",
-    # 1-row scalar broadcasts (corpus size / token totals / node count)
+    # 1-row scalar broadcasts (corpus size / token totals / bin totals)
     "unigram_logprob_score",
-    "bigram_logprob_score",
-    "tfidf_term_stats",
-    "pmi_bigrams",
-    "pagerank_trade_graph",
-    "chi_square_independence",
-    "triangle_count",
-    "join_key_skew_profile",
     "psi_drift",
     "rrf_fusion",
-    "token_budget_allocation",
     "source_kl_divergence",
     # 1-row total broadcast + 4-literal-row k-probe NLJ against the vocab
     "vocab_coverage_curve",

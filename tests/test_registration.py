@@ -127,6 +127,7 @@ def test_name_lists_are_registered():
     query, and _PRIORITY has no duplicates. _ordered_names() drops an
     unknown name silently, so a stale name would otherwise vanish."""
     import bench
+    import bench_scale_ramp
     from collective_als_spark.registry import _PRIORITY, SURVEY2_WITNESSES, spark_queries
     from tests.test_plan_audit import CROSS_JOIN_ALLOWED, SKIP
 
@@ -135,6 +136,7 @@ def test_name_lists_are_registered():
         "registry._PRIORITY": _PRIORITY,
         "registry.SURVEY2_WITNESSES": [n for ws in SURVEY2_WITNESSES.values() for n in ws],
         "bench.HEADLINE": bench.HEADLINE,
+        "bench_scale_ramp.HEAVY": bench_scale_ramp.HEAVY,
         "test_plan_audit.CROSS_JOIN_ALLOWED": CROSS_JOIN_ALLOWED,
         "test_plan_audit.SKIP": SKIP,
     }

@@ -1,7 +1,7 @@
 """Dump .explain('formatted') for named registered queries to
 plans/r16/<query>_<tag>.txt. Usage:
 
-    python tools/dump_plans.py after item_item_topk item_item_cosine
+    python tools/dump_plans.py after minhash_signature lsh_candidate_pairs
 """
 from __future__ import annotations
 

@@ -2,7 +2,7 @@
 methodology (noop sink, min-of-N) at $SPARK_GRAFT_SF_DIR /
 local[$SPARK_GRAFT_CPUS]. Usage:
 
-    python tools/time_queries.py item_item_topk item_item_cosine
+    python tools/time_queries.py minhash_signature lsh_candidate_pairs
 """
 from __future__ import annotations
 
