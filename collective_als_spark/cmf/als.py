@@ -10,38 +10,58 @@ Execution:
 
   - 2-entity single-relation fits delegate to
     ``pyspark.ml.recommendation.ALS`` (same algorithm family the
-    reference copied from) unless ``force_native`` is set. The
-    delegate is kept because it is faster at the same accuracy.
-    Measured on a warm local[4] session (4 vCPU), on perfbench's
-    ``make_ratings`` seed 1 (1000 users x 800 items, 80% chronological
-    train), rank 10, 10 iterations: 50k ratings fit in 4.1-4.7 s with
-    MLlib against 7.5-7.8 s native, 200k in 4.6-4.7 s against
-    8.8-9.0 s, at equal holdout RMSE (0.4270 vs 0.4267; 0.3757 both).
-    The native fit's 20 updates are 20 Python ``mapInPandas`` jobs of
-    about 0.4 s each.
+    reference copied from) unless ``force_native`` is set. Measured on
+    a warm local[4] session (4 vCPU), on perfbench's ``make_ratings``
+    seed 1 (1000 users x 800 items, 80% chronological train), rank 10,
+    10 iterations, reg 0.1, runs alternating: with the native fit on
+    the driver path, 50k ratings fit in 1.1-1.6 s native against
+    5.4-7.4 s with MLlib, 200k in 2.0-3.0 s against 5.9-8.0 s, at equal
+    holdout RMSE (0.4267 vs 0.4270; 0.3757 both). So the delegate is
+    no longer the faster fit; it stays until its removal is checked
+    against the planted-MovieLens numbers in
+    ``tests/test_movielens_parity.py``, which compare the two inits.
   - N-entity fits run a Gauss-Seidel loop over entities (reference
     ``CollectiveALS.scala:409-425``). Each entity's factors live on the
     driver as one sorted numpy array (``ids: int64[n]``,
-    ``F: float32[n, rank]``). At fit start every entity gets one
-    in-block: the union of every relation direction that touches it,
-    as (id, src, rating, rel) rows, hash-partitioned on id into
+    ``F: float32[n, rank]``). Every entity has one in-block: the union
+    of every relation direction that touches it, as (id, src, rating,
+    rel) rows sorted on id. An entity update looks each row's source
+    factor up with ``searchsorted`` and calls ``solver.solve_block``,
+    which solves every id's merged normal equations (the fullOuterJoin
+    merge at ``:1037-1047``); the solved ids are the entity's next
+    array. The init, the loop, the implicit YtY Gramians (computed on
+    the driver), the lookup, the solve, the guard and the model are the
+    same code on both paths below; only where an update's rows come
+    from differs.
+  - Where the updates run: the fit first collects the union of its
+    relations, at most ``MAX_LOCAL_FIT_ROWS + 1`` rows, in one Spark job
+    of one task. If that is every row, the in-blocks are numpy arrays
+    on the driver, and an update solves them in chunks of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows cut at id
+    boundaries, so the solve's buffers are one Arrow batch's whatever
+    the input size; no update starts a Spark job, a shuffle or a Python
+    worker. Otherwise each in-block is hash-partitioned on id into
     ``min(num_blocks, defaultParallelism)`` partitions, sorted on id
-    within each partition and persisted. An entity update is one
-    ``mapInPandas`` over its in-block: the source entities' arrays
-    arrive by ``SparkContext.broadcast``, rows find their source factor
-    with ``searchsorted``, and ``solver.solve_block`` solves every id's
-    merged normal equations (the fullOuterJoin merge at
-    ``:1037-1047``), one Arrow batch at a time; the last id of a batch
-    is carried into the next, so a task holds one batch plus one id's
-    rows however large its partition is. The solved block comes back to
-    the driver as the entity's next array. So an update is one Spark
-    job with no shuffle, no per-rating factor join and no checkpoint;
-    the implicit YtY Gramians are computed on the driver.
+    within each and persisted; one job collects the entity universes;
+    and an update is one ``mapInPandas`` over the in-block, with the
+    source arrays broadcast, solving one Arrow batch at a time and
+    carrying a batch's last id into the next, so a task holds one batch
+    plus one id's rows however large its partition is. That path stays
+    because it is the only one that runs above the bound.
+  - ``MAX_LOCAL_FIT_ROWS`` (2M rows) is sized by driver memory, not by
+    speed. A 3-entity fit (rank 10, 2 iterations) of exactly 2M rows
+    (1.95M user-item + 50k item-tag) raised the driver's Python peak RSS
+    from 112 MB to 460 MB and the JVM's from 896 MB to 969 MB (3 GB
+    heap), so the bound costs well under 1 GB of driver memory. On a
+    4-vCPU host the driver path was the faster one at every size tried:
+    1.84M rows fit in 10.8 s against 18.0 s on Spark (whose JVM peaked
+    at 1.4 GB against 0.8 GB), and see the 2-entity numbers above.
   - Guard: an entity with more than ``MAX_FACTOR_IDS`` ids raises
     ``ValueError`` before any factor is built, since its array must fit
-    on the driver and in every executor's broadcast. The id collect
-    that feeds the guard is itself limited to ``MAX_FACTOR_IDS + 1``
-    ids per entity.
+    on the driver and in every executor's broadcast. The Spark path's
+    id collect that feeds the guard is itself limited to
+    ``MAX_FACTOR_IDS + 1`` ids per entity; the driver path's ids come
+    from the bounded row collect.
   - ``checkpoint_interval`` reaches only the MLlib delegate. The native
     loop's state is the driver arrays, so it has no lineage to truncate.
 
@@ -52,6 +72,7 @@ collected once, on first use. Fold-in serving (cmf/foldin.py) reads it.
 
 from __future__ import annotations
 
+import sys
 from functools import reduce
 from typing import Iterable
 
@@ -86,6 +107,11 @@ def _check_numeric(df: DataFrame, col: str) -> None:
 # Largest entity (in ids) whose factors the fit and the model's factor
 # cache hold on the driver and broadcast; at rank 100 this is 800 MB.
 MAX_FACTOR_IDS = 2_000_000
+
+# Most rating rows (all relations together) a fit collects to run its
+# entity updates on the driver; above it they run on Spark. Sized by
+# driver memory (see the module docstring), not by speed.
+MAX_LOCAL_FIT_ROWS = 2_000_000
 
 
 def _check_factor_size(entity: str, n_ids: int) -> None:
@@ -243,6 +269,122 @@ class CollectiveALSModel:
         )
 
 
+class _DriverBlocks:
+    """In-blocks on the driver: per entity, the rows of every relation
+    direction that targets it as numpy (id, src, rating, rel) arrays
+    sorted on id. An update starts no Spark job: it solves them in
+    chunks of about ``chunk`` rows cut at id boundaries, so the solve's
+    buffers stay as small as a Spark task's, which solves one Arrow
+    batch."""
+
+    def __init__(self, rows: pd.DataFrame, dirs: list, rank: int, chunk: int):
+        self.rank = rank
+        # a non-positive Arrow batch size means one batch: here, one chunk
+        self.chunk = chunk if chunk > 0 else sys.maxsize
+        rel = rows["rel"].values
+        self.blocks = []
+        for d in dirs:
+            blk = pd.concat([
+                rows.loc[rel == j, [i, s, "rating"]]
+                .set_axis(["id", "src", "rating"], axis=1).assign(rel=k)
+                for k, (j, i, s, _) in enumerate(d)
+            ], ignore_index=True)
+            order = np.argsort(blk["id"].values, kind="stable")
+            self.blocks.append((
+                blk["id"].values.astype(np.int64)[order],
+                blk["src"].values.astype(np.int64)[order],
+                blk["rating"].values[order],
+                blk["rel"].values[order],
+            ))
+
+    def universes(self) -> list[np.ndarray]:
+        return [np.unique(ids) for ids, *_ in self.blocks]
+
+    def update(self, e: int, solve, arrays: dict) -> tuple[np.ndarray, np.ndarray]:
+        ids = self.blocks[e][0]
+        if len(ids) == 0:
+            return ids, np.zeros((0, self.rank), dtype=np.float32)
+        cuts = np.r_[np.unique(np.searchsorted(ids, ids[::self.chunk])), len(ids)]
+        out = [
+            solve(*(a[lo:hi] for a in self.blocks[e]), arrays)
+            for lo, hi in zip(cuts[:-1], cuts[1:])
+        ]
+        return np.concatenate([u for u, _ in out]), np.concatenate([x for _, x in out])
+
+    def close(self) -> None:
+        pass
+
+
+class _SparkBlocks:
+    """In-blocks on Spark: per entity, the same rows hash-partitioned on
+    id into ``n_parts[e]`` partitions, sorted on id within each and
+    persisted. An update is one ``mapInPandas`` job that reads the source
+    factors from a broadcast and solves one Arrow batch at a time."""
+
+    def __init__(self, relations: list, dirs: list, n_parts: list[int], rank: int,
+                 level: StorageLevel):
+        self.sc = relations[0][2].sparkSession.sparkContext
+        self.rank = rank
+        self.blocks = [
+            reduce(DataFrame.union, [
+                relations[j][2].select(F.col(i).alias("id"), F.col(s).alias("src"),
+                                       "rating", F.lit(k).alias("rel"))
+                for k, (j, i, s, _) in enumerate(d)
+            ]).repartition(n, "id").sortWithinPartitions("id").persist(level)
+            for d, n in zip(dirs, n_parts)
+        ]
+
+    def universes(self) -> list[np.ndarray]:
+        # One job (which also fills the in-block caches), at most
+        # MAX_FACTOR_IDS + 1 ids per entity, so the guard runs before an
+        # oversized entity reaches the driver.
+        u = reduce(DataFrame.union, [
+            blk.select("id").distinct().limit(MAX_FACTOR_IDS + 1)
+            .select(F.lit(e).alias("e"), "id")
+            for e, blk in enumerate(self.blocks)
+        ]).toPandas()
+        return [
+            np.sort(u["id"].values[u["e"].values == e].astype(np.int64))
+            for e in range(len(self.blocks))
+        ]
+
+    def update(self, e: int, solve, arrays: dict) -> tuple[np.ndarray, np.ndarray]:
+        b = self.sc.broadcast(arrays)
+
+        def solve_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+            uids, sol = solve(
+                pdf["id"].values, pdf["src"].values.astype(np.int64),
+                pdf["rating"].values, pdf["rel"].values, b.value,
+            )
+            return pd.DataFrame({"id": uids.astype(np.int32), "features": list(sol)})
+
+        def update(batches: Iterable[pd.DataFrame]):
+            # The partition is sorted on id: solve each Arrow batch but
+            # its last id, whose rows may continue in the next batch and
+            # are carried into it.
+            carry = None
+            for pdf in batches:
+                if carry is not None:
+                    pdf = pd.concat([carry, pdf], ignore_index=True)
+                if len(pdf) == 0:
+                    continue
+                ids = pdf["id"].values
+                cut = int(np.searchsorted(ids, ids[-1]))
+                carry = pdf.iloc[cut:]
+                if cut:
+                    yield solve_batch(pdf.iloc[:cut])
+            if carry is not None:
+                yield solve_batch(carry)
+
+        out = self.blocks[e].mapInPandas(update, _FACTOR_SCHEMA).toPandas()
+        b.destroy()
+        return _sorted_arrays(out, self.rank)
+
+    def close(self) -> None:
+        for blk in self.blocks:
+            blk.unpersist()
+
+
 class CollectiveALS:
     """Estimator. Defaults follow the reference class defaults
     (``CollectiveALS.scala:27-58``) with quirk fixes Q4/Q7 (seed
@@ -340,6 +482,13 @@ class CollectiveALS:
         names; a self relation (e, e) has the column e twice, left side
         first. ``rating_col`` may be "" for implicit all-ones ratings
         (reference ``:104``)."""
+        if isinstance(self.num_blocks, dict):
+            unknown = set(self.num_blocks) - set(self.entities)
+            if unknown:
+                raise ValueError(
+                    f"num_blocks names unknown entities {sorted(unknown)}; "
+                    f"entities={self.entities}"
+                )
         if isinstance(relations, DataFrame):
             relations = {(self.entities[0], self.entities[1]): relations}
         norm: list[tuple[int, int, DataFrame]] = []
@@ -430,12 +579,6 @@ class CollectiveALS:
         (``IHRALS.scala:29``)."""
         v = self.num_blocks
         if isinstance(v, dict):
-            unknown = set(v) - set(self.entities)
-            if unknown:
-                raise ValueError(
-                    f"num_blocks names unknown entities {sorted(unknown)}; "
-                    f"entities={self.entities}"
-                )
             v = v.get(entity_name, self._num_blocks_default)
         if v == "auto":
             par = (
@@ -448,103 +591,77 @@ class CollectiveALS:
         self, relations: list[tuple[int, int, DataFrame]]
     ) -> CollectiveALSModel:
         spark = relations[0][2].sparkSession
-        sc = spark.sparkContext
         n_ent = len(self.entities)
 
-        # In-blocks: per target entity, every relation direction that
-        # touches it as (id, src, rating, rel), hash-partitioned on id
-        # once and persisted. src_of[e][rel] is the source entity of
-        # relation index rel (a self relation contributes both directions).
-        src_of: list[list[int]] = []
-        inblocks: list[DataFrame] = []
+        # dirs[e]: every relation direction that targets entity e, as
+        # (relation index, id column, source column, source entity); a
+        # self relation contributes both directions. The position of a
+        # direction in dirs[e] is its in-block "rel" value.
+        dirs: list[list[tuple[int, str, str, int]]] = []
         for e in range(n_ent):
-            dirs = []  # (relation, id column, source column, source entity)
-            for li, ri, df in relations:
+            d = []
+            for j, (li, ri, _) in enumerate(relations):
                 if ri == e:
-                    dirs.append((df, "dst", "src", li))
+                    d.append((j, "dst", "src", li))
                 if li == e:
-                    dirs.append((df, "src", "dst", ri))
-            if not dirs:
+                    d.append((j, "src", "dst", ri))
+            if not d:
                 raise ValueError(f"entity {self.entities[e]!r} appears in no relation")
-            src_of.append([s for *_, s in dirs])
-            blk = reduce(DataFrame.union, [
-                df.select(F.col(i).alias("id"), F.col(s).alias("src"), "rating",
-                          F.lit(j).alias("rel"))
-                for j, (df, i, s, _) in enumerate(dirs)
-            ])
-            n_part = min(self._blocks_for(self.entities[e], spark), sc.defaultParallelism)
-            inblocks.append(
-                blk.repartition(n_part, "id").sortWithinPartitions("id")
-                .persist(self.intermediate_storage_level)
-            )
+            dirs.append(d)
 
-        # Entity universes in one job (which also fills the in-block
-        # caches), at most MAX_FACTOR_IDS + 1 ids each so the guard runs
-        # before an oversized entity reaches the driver; then the
-        # deterministic per-id init (reference :394-402).
-        u = reduce(DataFrame.union, [
-            blk.select("id").distinct().limit(MAX_FACTOR_IDS + 1)
-            .select(F.lit(e).alias("e"), "id")
-            for e, blk in enumerate(inblocks)
-        ]).toPandas()
-        state: list[tuple[np.ndarray, np.ndarray]] = []
-        for e in range(n_ent):
-            ids = np.sort(u["id"].values[u["e"].values == e].astype(np.int64))
-            _check_factor_size(self.entities[e], len(ids))
-            state.append((ids, S.init_factors_for_ids(ids, self.rank, self.seed, e)))
+        # One bounded collect decides where the updates run. A single task
+        # reads the relations in turn and stops after MAX_LOCAL_FIT_ROWS + 1
+        # rows: a limit over many partitions would shuffle up to that many
+        # rows from each of them.
+        rows = reduce(DataFrame.union, [
+            df.select("src", "dst", "rating", F.lit(j).alias("rel"))
+            for j, (_, _, df) in enumerate(relations)
+        ]).coalesce(1).limit(MAX_LOCAL_FIT_ROWS + 1).toPandas()
+        if len(rows) <= MAX_LOCAL_FIT_ROWS:
+            chunk = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+            blocks = _DriverBlocks(rows, dirs, self.rank, chunk)
+        else:
+            del rows
+            n_parts = [
+                min(self._blocks_for(name, spark), spark.sparkContext.defaultParallelism)
+                for name in self.entities
+            ]
+            blocks = _SparkBlocks(
+                relations, dirs, n_parts, self.rank, self.intermediate_storage_level
+            )
 
         rank, reg, alpha = self.rank, self.reg_param, self.alpha
         implicit, nonneg = self.implicit_prefs, self.nonnegative
+        try:
+            # the deterministic per-id init (reference :394-402)
+            state: list[tuple[np.ndarray, np.ndarray]] = []
+            for e, ids in enumerate(blocks.universes()):
+                _check_factor_size(self.entities[e], len(ids))
+                state.append((ids, S.init_factors_for_ids(ids, rank, self.seed, e)))
 
-        for _ in range(self.max_iter):
-            for e in range(n_ent):
-                srcs = tuple(src_of[e])
-                # YtY of each relation's source factors, added once per
-                # (id, relation) present (reference :1003,1037-1047)
-                yty = (
-                    np.stack([S.compute_yty(state[s][1].astype(np.float64)) for s in srcs])
-                    if implicit else None
-                )
-                b = sc.broadcast({s: state[s] for s in set(srcs)})
-
-                def solve(pdf: pd.DataFrame, arrays, srcs=srcs, yty=yty) -> pd.DataFrame:
-                    rel = pdf["rel"].values
-                    src = pdf["src"].values.astype(np.int64)
-                    X = np.empty((len(pdf), rank), dtype=np.float32)
-                    for j, s in enumerate(srcs):
-                        m = rel == j
-                        sids, SF = arrays[s]
-                        X[m] = SF[np.searchsorted(sids, src[m])]
-                    uids, sol = S.solve_block(
-                        pdf["id"].values, X, pdf["rating"].values, rel, yty,
-                        reg, alpha, implicit, nonneg,
+            for _ in range(self.max_iter):
+                for e in range(n_ent):
+                    srcs = tuple(s for *_, s in dirs[e])
+                    # YtY of each relation's source factors, added once per
+                    # (id, relation) present (reference :1003,1037-1047)
+                    yty = (
+                        np.stack([S.compute_yty(state[s][1].astype(np.float64)) for s in srcs])
+                        if implicit else None
                     )
-                    return pd.DataFrame({"id": uids.astype(np.int32), "features": list(sol)})
 
-                def update(batches: Iterable[pd.DataFrame], b=b, solve=solve):
-                    # The partition is sorted on id: solve each Arrow batch
-                    # but its last id, whose rows may continue in the next
-                    # batch and are carried into it.
-                    carry = None
-                    for pdf in batches:
-                        if carry is not None:
-                            pdf = pd.concat([carry, pdf], ignore_index=True)
-                        if len(pdf) == 0:
-                            continue
-                        ids = pdf["id"].values
-                        cut = int(np.searchsorted(ids, ids[-1]))
-                        carry = pdf.iloc[cut:]
-                        if cut:
-                            yield solve(pdf.iloc[:cut], b.value)
-                    if carry is not None:
-                        yield solve(carry, b.value)
+                    def solve(ids, src, rating, rel, arrays, srcs=srcs, yty=yty):
+                        X = np.empty((len(ids), rank), dtype=np.float32)
+                        for j, s in enumerate(srcs):
+                            m = rel == j
+                            sids, SF = arrays[s]
+                            X[m] = SF[np.searchsorted(sids, src[m])]
+                        return S.solve_block(
+                            ids, X, rating, rel, yty, reg, alpha, implicit, nonneg
+                        )
 
-                out = inblocks[e].mapInPandas(update, _FACTOR_SCHEMA).toPandas()
-                b.destroy()
-                state[e] = _sorted_arrays(out, rank)
-
-        for blk in inblocks:
-            blk.unpersist()
+                    state[e] = blocks.update(e, solve, {s: state[s] for s in set(srcs)})
+        finally:
+            blocks.close()
 
         named = {
             self.entities[e]: _factor_frame(spark, *state[e]) for e in range(n_ent)

@@ -165,12 +165,22 @@ def test_recommend_topk_guard(spark):
         )
 
 
-def test_per_entity_num_blocks(spark):
+def test_per_entity_num_blocks(spark, monkeypatch):
     """Reference API parity: numBlocks is per entity
     (CollectiveALS.scala:29-30,63-66). Dict form and the fluent
     per-entity setter give the same factors as a global int (block
-    count only changes shuffle layout, not math)."""
+    count only changes shuffle layout, not math). Only the Spark update
+    path uses blocks, so the fits compare there; both paths reject an
+    unknown entity."""
+    from collective_als_spark.cmf import als
+
     df = _synth_ratings(spark).cache()
+    for bound in (als.MAX_LOCAL_FIT_ROWS, 0):  # driver path, then Spark path
+        monkeypatch.setattr(als, "MAX_LOCAL_FIT_ROWS", bound)
+        with pytest.raises(ValueError, match="unknown entities"):
+            CollectiveALS("user", "item", num_blocks={"nope": 3},
+                          force_native=True).fit(df)
+
     base = CollectiveALS("user", "item", rank=4, max_iter=3, seed=1,
                          num_blocks=4, force_native=True).fit(df)
     perent = CollectiveALS("user", "item", rank=4, max_iter=3, seed=1,
@@ -196,10 +206,6 @@ def test_per_entity_num_blocks(spark):
     for i in fb:
         np.testing.assert_allclose(fb[i], fp[i], rtol=1e-4)
         np.testing.assert_allclose(fp[i], ff[i], rtol=1e-4)
-
-    with pytest.raises(ValueError, match="unknown entities"):
-        CollectiveALS("user", "item", num_blocks={"nope": 3},
-                      force_native=True).fit(df)
 
 
 def test_checkpoint_interval_contract(spark):

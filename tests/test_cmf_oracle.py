@@ -1,16 +1,19 @@
 """The collective fit against the dense numpy Gauss-Seidel reference
 (tests/cmf_oracle.py), the nonnegative fit against the KKT conditions,
-fold-in's two paths against each other, and the size guards."""
+fold-in's two paths against each other, and the size guards. Each fit
+runs on both update paths: on the driver (its ratings are below
+MAX_LOCAL_FIT_ROWS) and, with that bound at 0, on Spark."""
 
 import numpy as np
 import pytest
 
-from collective_als_spark.cmf import CollectiveALS
+from collective_als_spark.cmf import CollectiveALS, als
 from collective_als_spark.cmf.solver import init_factors_for_ids
 
 from tests.cmf_oracle import gauss_seidel, normal_equations, relation, touching
 
 RANK, REG, SEED = 3, 0.1, 5
+PATHS = ("driver", "spark")
 
 
 def _random_relation(rng, n_src, n_dst, per_src, implicit=False):
@@ -30,29 +33,37 @@ def _frame(spark, rel, lcol, rcol):
     return df.toDF(lcol, rcol, "rating")  # a self relation repeats its column
 
 
-def _fit(spark, entities, rels, **kw):
+def _fit(spark, entities, rels, path="driver", **kw):
     frames = {
         (entities[li], entities[ri]): _frame(spark, rel, entities[li], entities[ri])
         for li, ri, rel in rels
     }
     kw = dict(rank=RANK, reg_param=REG, seed=SEED, num_blocks=3, force_native=True) | kw
-    return CollectiveALS(*entities, **kw).fit(frames)
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "spark":
+            mp.setattr(als, "MAX_LOCAL_FIT_ROWS", 0)
+        return CollectiveALS(*entities, **kw).fit(frames)
 
 
-def _assert_matches_oracle(model, entities, rels, max_iter, **kw):
+def _assert_fits_match_oracle(spark, entities, rels, max_iter, fit_kw=None, **kw):
     ids, factors = gauss_seidel(len(entities), rels, RANK, max_iter, REG, SEED, **kw)
-    for e, name in enumerate(entities):
-        got = model.factors_for(name).toPandas().sort_values("id")
-        np.testing.assert_array_equal(got["id"].values, ids[e])
-        np.testing.assert_allclose(
-            np.stack(got["features"].values), factors[e], atol=1e-5, err_msg=name
-        )
+    for path in PATHS:
+        model = _fit(spark, entities, rels, path, max_iter=max_iter, **(fit_kw or {}))
+        for e, name in enumerate(entities):
+            got = model.factors_for(name).toPandas().sort_values("id")
+            np.testing.assert_array_equal(got["id"].values, ids[e])
+            np.testing.assert_allclose(
+                np.stack(got["features"].values), factors[e], atol=1e-5,
+                err_msg=f"{path} {name}",
+            )
 
 
 @pytest.mark.parametrize("batch_rows", [None, 7])
 def test_two_entity_fit_matches_oracle(spark, batch_rows):
-    """Update tasks solve one Arrow batch at a time; with 7-row batches
-    most ids' rows span a batch boundary and are carried over."""
+    """Spark update tasks solve one Arrow batch at a time, and the driver
+    update one chunk of that many rows; with 7-row batches most ids'
+    rows span a boundary (Spark carries them into the next batch, the
+    driver moves the chunk's end to the next id)."""
     rng = np.random.default_rng(0)
     rels = [(0, 1, _random_relation(rng, 20, 15, 5))]
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -60,10 +71,9 @@ def test_two_entity_fit_matches_oracle(spark, batch_rows):
     if batch_rows:
         spark.conf.set(key, str(batch_rows))
     try:
-        model = _fit(spark, ["user", "item"], rels, max_iter=3)
+        _assert_fits_match_oracle(spark, ["user", "item"], rels, 3)
     finally:
         spark.conf.set(key, old)
-    _assert_matches_oracle(model, ["user", "item"], rels, 3)
 
 
 def test_three_entity_fit_matches_oracle(spark):
@@ -72,8 +82,7 @@ def test_three_entity_fit_matches_oracle(spark):
     # item ids are 100.., so the side relation's source ids start there too
     s, d, r = _random_relation(rng, 15, 6, 2)
     rels = [(0, 1, ratings), (1, 2, relation(s + 100, d, r))]
-    model = _fit(spark, ["user", "item", "tag"], rels, max_iter=3)
-    _assert_matches_oracle(model, ["user", "item", "tag"], rels, 3)
+    _assert_fits_match_oracle(spark, ["user", "item", "tag"], rels, 3)
 
 
 def test_self_relation_fit_matches_oracle(spark):
@@ -84,8 +93,7 @@ def test_self_relation_fit_matches_oracle(spark):
     s, d, r = _random_relation(rng, 20, 20, 3)
     social = relation(s, d - 100, r)
     rels = [(0, 1, ratings), (0, 0, social)]
-    model = _fit(spark, ["user", "item"], rels, max_iter=2)
-    _assert_matches_oracle(model, ["user", "item"], rels, 2)
+    _assert_fits_match_oracle(spark, ["user", "item"], rels, 2)
 
 
 def test_implicit_fit_with_negative_ratings_matches_oracle(spark):
@@ -96,10 +104,9 @@ def test_implicit_fit_with_negative_ratings_matches_oracle(spark):
     assert (ratings[2] < 0).any() and (ratings[2] > 0).any()
     s, d, r = _random_relation(rng, 15, 5, 2, implicit=True)
     rels = [(0, 1, ratings), (1, 2, relation(s + 100, d, r))]
-    kw = dict(implicit=True, alpha=2.0)
-    model = _fit(spark, ["user", "item", "tag"], rels, max_iter=2,
-                 implicit_prefs=True, alpha=2.0)
-    _assert_matches_oracle(model, ["user", "item", "tag"], rels, 2, **kw)
+    _assert_fits_match_oracle(spark, ["user", "item", "tag"], rels, 2,
+                              dict(implicit_prefs=True, alpha=2.0),
+                              implicit=True, alpha=2.0)
 
 
 def test_nonnegative_fit_meets_kkt(spark):
@@ -110,22 +117,23 @@ def test_nonnegative_fit_meets_kkt(spark):
     rng = np.random.default_rng(4)
     s, d, r = _random_relation(rng, 20, 15, 5)
     rels = [(0, 1, relation(s, d, np.abs(r)))]
-    model = _fit(spark, ["user", "item"], rels, max_iter=1, nonnegative=True)
     ids = [np.unique(s), np.unique(d)]
-    factors = [np.zeros((len(ids[0]), RANK), np.float32),
-               init_factors_for_ids(ids[1], RANK, SEED, 1)]
-    for e, name in enumerate(["user", "item"]):
-        got = model.factors_for(name).toPandas().sort_values("id")
-        X = np.stack(got["features"].values).astype(np.float64)
-        rows = touching(e, rels)
-        for u, x in zip(ids[e], X):
-            A, b = normal_equations(u, rows, ids, factors, REG, False, 1.0)
-            g = A @ x - b
-            tol = 1e-4 * (1.0 + np.abs(b).max())
-            assert (x >= 0).all(), (name, u, x)
-            assert (g >= -tol).all(), (name, u, g)
-            assert np.abs(x * g).max() <= tol, (name, u, x, g)
-        factors[e] = X.astype(np.float32)
+    for path in PATHS:
+        model = _fit(spark, ["user", "item"], rels, path, max_iter=1, nonnegative=True)
+        factors = [np.zeros((len(ids[0]), RANK), np.float32),
+                   init_factors_for_ids(ids[1], RANK, SEED, 1)]
+        for e, name in enumerate(["user", "item"]):
+            got = model.factors_for(name).toPandas().sort_values("id")
+            X = np.stack(got["features"].values).astype(np.float64)
+            rows = touching(e, rels)
+            for u, x in zip(ids[e], X):
+                A, b = normal_equations(u, rows, ids, factors, REG, False, 1.0)
+                g = A @ x - b
+                tol = 1e-4 * (1.0 + np.abs(b).max())
+                assert (x >= 0).all(), (path, name, u, x)
+                assert (g >= -tol).all(), (path, name, u, g)
+                assert np.abs(x * g).max() <= tol, (path, name, u, x, g)
+            factors[e] = X.astype(np.float32)
 
 
 @pytest.mark.parametrize("implicit", [False, True])
@@ -177,8 +185,6 @@ def test_factor_cache_collects_once(spark):
 
 
 def test_fit_guard_raises(spark, monkeypatch):
-    from collective_als_spark.cmf import als
-
     # record how many rows each collect brings to the driver
     sizes = []
     frame_cls = type(spark.range(1))
@@ -188,10 +194,31 @@ def test_fit_guard_raises(spark, monkeypatch):
     )
     monkeypatch.setattr(als, "MAX_FACTOR_IDS", 10)
     rels = [(0, 1, _random_relation(np.random.default_rng(7), 20, 15, 3))]
-    with pytest.raises(ValueError, match="MAX_FACTOR_IDS"):
-        _fit(spark, ["user", "item"], rels, max_iter=1)
-    # 20 users + 15 items, but at most MAX_FACTOR_IDS + 1 ids per entity
-    assert sizes == [22]
+    # driver: the one collect, 60 rating rows (at most MAX_LOCAL_FIT_ROWS
+    # + 1). Spark: the row collect stops at MAX_LOCAL_FIT_ROWS + 1 = 1;
+    # then 20 users + 15 items, but at most MAX_FACTOR_IDS + 1 ids each.
+    for path, collected in (("driver", [60]), ("spark", [1, 22])):
+        sizes.clear()
+        with pytest.raises(ValueError, match="MAX_FACTOR_IDS"):
+            _fit(spark, ["user", "item"], rels, path, max_iter=1)
+        assert sizes == collected, path
+
+
+def test_driver_fit_runs_one_spark_job(spark):
+    """Below MAX_LOCAL_FIT_ROWS the only Spark job of a 3-entity fit is
+    the collect of its ratings; the updates start none."""
+    rng = np.random.default_rng(8)
+    s, d, r = _random_relation(rng, 15, 6, 2)
+    rels = [(0, 1, _random_relation(rng, 25, 15, 4)), (1, 2, relation(s + 100, d, r))]
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-fit", "3-entity fit below MAX_LOCAL_FIT_ROWS")
+    try:
+        _fit(spark, ["user", "item", "tag"], rels, max_iter=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("driver-fit")) == 1
 
 
 def test_factor_cache_guard_raises(spark, monkeypatch):

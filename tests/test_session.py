@@ -9,13 +9,14 @@ import textwrap
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# A caller that only puts the package on the driver's sys.path; the
-# native fit's mapInPandas then needs the package in the Python workers.
+# A caller that only puts the package on the driver's sys.path; fold_in's
+# applyInPandas then needs the package in the Python workers.
 _OUTSIDE_FIT = textwrap.dedent(
     f"""
     import sys
     sys.path.insert(0, {REPO_ROOT!r})
     from collective_als_spark import CollectiveALS, get_spark
+    from collective_als_spark.cmf.foldin import fold_in
 
     spark = get_spark("outside_repo_root", shuffle_partitions=2)
     rows = [(u, i, float((u * 7 + i) % 5 + 1)) for u in range(12) for i in range(8)]
@@ -23,6 +24,8 @@ _OUTSIDE_FIT = textwrap.dedent(
     model = CollectiveALS("user", "item", rank=2, max_iter=1, num_blocks=2,
                           force_native=True).fit(df)
     print("n_items", model.factors_for("item").count())
+    new = spark.createDataFrame([(100, 1, 4.0), (100, 2, 2.0)], "u int, i int, rating double")
+    print("n_folded", fold_in(model, new, "u", "item", "i").count())
     spark.stop()
     """
 )
@@ -39,3 +42,4 @@ def test_native_fit_runs_outside_repo_root(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "n_items 8" in proc.stdout
+    assert "n_folded 1" in proc.stdout
